@@ -45,7 +45,6 @@ object ConnectedComponents {
       // localCheckpoint truncates the per-round lineage growth (the iterative
       // analogue of GraphFrames' checkpoint interval); eager, so it also
       // materializes the round for the cheap convergence counts below.
-      val t0 = System.nanoTime()
       val ss = smallStar(largeStar(e)).localCheckpoint(true)
       // Stable iff the (src,dst) set is unchanged; both sides are distinct
       // sets here so equal counts + empty anti-join is an exact test.
@@ -57,8 +56,6 @@ object ConnectedComponents {
       e = ss
       eCount = ssCount
       round += 1
-      if (sys.props.contains("graft.cc.verbose") || sys.env.contains("GRAFT_CC_VERBOSE"))
-        println(f"[cc] round=$round edges=$ssCount converged=$converged secs=${(System.nanoTime() - t0) / 1e9}%.2f")
     }
 
     // Star edges point child -> root (src > dst); roots label themselves.

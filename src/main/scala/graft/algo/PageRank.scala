@@ -238,10 +238,7 @@ object PageRank {
     val iterTimes = scala.collection.mutable.ArrayBuffer[Double]()
     val toRelease = scala.collection.mutable.ArrayBuffer[DataFrame]()
 
-    val joinHint = sys.env.getOrElse("GRAFT_PR_JOIN", "shuffle_hash") match {
-      case "smj" => "merge"
-      case h => h
-    }
+    val joinHint = "shuffle_hash"
     while (delta >= tol && iter < maxIter) {
       val iterT0 = System.nanoTime()
       // Gather-scatter: fan rank/odeg out over the CSR rows (map-side explode,
@@ -263,7 +260,6 @@ object PageRank {
       // without bound (measured: 0.2s -> 88s/iteration by iteration 25).
       // The aggregate boundary below contribs resets the collection, so this
       // plan's partitioning stays constant-size across iterations.
-      val tCk0 = System.nanoTime()
       val next = verts
         .join(contribs.hint(joinHint), Seq("vid"), "left")
         .select(
@@ -272,7 +268,6 @@ object PageRank {
           col("dangling"))
         .localCheckpoint(true)
       toRelease += ranks
-      val tAgg0 = System.nanoTime()
 
       // The convergence action: one co-partitioned (exchange-free) pass over
       // the fresh checkpoint and its predecessor computes the per-step L-inf
@@ -286,8 +281,6 @@ object PageRank {
         .head()
       delta = row.getDouble(0)
       danglingMass = row.getDouble(1)
-      if (sys.env.contains("GRAFT_PR_TIMING"))
-        println(f"[prt] iter=${iter + 1} plan=${(tCk0 - iterT0) / 1e9}%.2f ck=${(tAgg0 - tCk0) / 1e9}%.2f agg=${(System.nanoTime() - tAgg0) / 1e9}%.2f")
 
       // Release the vector superseded TWO iterations ago (the direct parent
       // stays pinned until the new checkpoint is materialized by the action
@@ -307,8 +300,6 @@ object PageRank {
       ranks = next
       iter += 1
       iterTimes += (System.nanoTime() - iterT0) / 1e9
-      if (sys.env.contains("GRAFT_PR_VERBOSE"))
-        println(f"[pr] iter=$iter delta=$delta%.3e secs/iter=${(System.nanoTime() - iterT0) / 1e9}%.2f")
       onIterationEnd(iter)
       checkpoint.foreach(_.maybeWrite(iter, delta, ranks.select("vid", "rank", "dangling")))
     }
@@ -330,38 +321,4 @@ object PageRank {
     * leaf (Dataset.unpersist cannot reach it — without this, every
     * iteration's ~|V|-row checkpoint stays resident until a driver GC). */
   private def releaseVector(df: DataFrame): Unit = GraphOps.releaseCheckpoint(df)
-
-  /** Fixed-iteration variant (no convergence action inside the loop beyond
-    * the dangling-mass pass) used by oracle-comparable queries where the
-    * iteration count must match an unrolled SQL oracle exactly. */
-  def runFixed(spark: SparkSession, edges: DataFrame, iterations: Int, damping: Double = 0.85): DataFrame = {
-    val e = GraphOps.canonicalEdges(edges)
-    val odeg = e.groupBy("src").agg(count(lit(1)).as("odeg"))
-    val links = e.join(odeg, "src").select(col("src"), col("dst"), col("odeg")).persist(StorageLevel.MEMORY_AND_DISK)
-    val verts = GraphOps.vertices(e)
-      .join(odeg.select(col("src").as("vid")).withColumn("hasOut", lit(true)), Seq("vid"), "left")
-      .select(col("vid"), col("hasOut").isNull.as("dangling"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = verts.count()
-    val teleport = (1.0 - damping) / n
-    var ranks = verts.select(col("vid"), lit(1.0 / n).as("rank"), col("dangling"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var i = 0
-    while (i < iterations) {
-      val dmass = ranks.where(col("dangling")).agg(coalesce(sum("rank"), lit(0.0))).head().getDouble(0)
-      val contribs = ranks.as("r").join(links.as("l"), col("r.vid") === col("l.src"))
-        .groupBy(col("l.dst").as("vid"))
-        .agg(sum(col("r.rank") / col("l.odeg")).as("contrib"))
-      val base = teleport + damping * dmass / n
-      val nr = verts.join(contribs, Seq("vid"), "left")
-        .select(col("vid"), (lit(base) + lit(damping) * coalesce(col("contrib"), lit(0.0))).as("rank"), col("dangling"))
-        .localCheckpoint(true)
-      releaseVector(ranks) // the superseded vector's CHECKPOINT blocks too
-      ranks = nr
-      i += 1
-    }
-    links.unpersist(false)
-    verts.unpersist(false)
-    ranks.select(col("vid"), col("rank"))
-  }
 }

@@ -44,7 +44,8 @@ object ReferenceOracles {
     rank
   }
 
-  /** Fixed-iteration PageRank (matches [[graft.algo.PageRank.runFixed]]). */
+  /** Fixed-iteration PageRank (matches [[graft.algo.PageRank.run]] with
+    * `tol = 0.0, maxIter = iterations`). */
   def pageRankScalarFixed(edges: Seq[(Long, Long)], iterations: Int, damping: Double = 0.85): Map[Long, Double] = {
     val dedup = edges.distinct.filter(e => e._1 != e._2)
     val verts = vertexSet(dedup)

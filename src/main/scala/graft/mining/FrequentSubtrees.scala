@@ -114,12 +114,14 @@ object FrequentSubtrees {
     * transaction once per pair). Round-6.2: the DFS miner caches an RDD of
     * (graphId, GraphCtx) objects ([[keyedGraphCtx]]) so the lazy indexes
     * additionally survive across its many expansions; Serializable so a
-    * MEMORY_AND_DISK spill can write it. */
-  private final class GraphCtx(val g: TGraph) extends Serializable {
-    lazy val gt: SubtreeIso.LTree = toLTree(g.vlabels, g.edges)
-    lazy val psLts: Seq[SubtreeIso.LTree] =
+    * MEMORY_AND_DISK spill can write it. The indexes are `@transient`: they
+    * are derived from `g`, so a spill writes only the graph and a read-back
+    * copy rebuilds them on first use. */
+  private[mining] final class GraphCtx(val g: TGraph) extends Serializable {
+    @transient lazy val gt: SubtreeIso.LTree = toLTree(g.vlabels, g.edges)
+    @transient lazy val psLts: Seq[SubtreeIso.LTree] =
       g.psForests.map(f => SubtreeIso.LTree(g.vlabels.toArray, f.toArray))
-    lazy val comps: Seq[SubtreeIso.LTree] = graft.trees.LocalEasy.components(gt)
+    @transient lazy val comps: Seq[SubtreeIso.LTree] = graft.trees.LocalEasy.components(gt)
   }
 
   /** One embedding-operator evaluation (the `lwg -e` dispatch shared by the
@@ -127,7 +129,7 @@ object FrequentSubtrees {
     * the GraphCtx hoisting: every randomized operator draws from a fresh
     * `seed ^ graphId`-keyed generator per (pattern, graph) exactly as
     * before. */
-  private def embedsCtx(operator: EmbeddingOp,
+  private[mining] def embedsCtx(operator: EmbeddingOp,
       vl: Seq[String], es: Seq[(Int, Int, String)], ctx: GraphCtx): Boolean = {
     val h = toLTree(vl, es)
     val g = ctx.g
@@ -182,10 +184,7 @@ object FrequentSubtrees {
   private def transactionGraphs(spark: SparkSession, v: DataFrame, e: DataFrame,
       operator: EmbeddingOp): Dataset[TGraph] = {
     import spark.implicits._
-    val requireForest = operator match {
-      case ExactSubtree | AbsImportant(_) | RelImportant(_) => true // per-component isSubtree
-      case _ => false
-    }
+    val requireForest = preparation(operator)._1
     v.groupBy("graph_id")
       .agg(collect_list(struct(col("vid"), col("vlabel"))).as("vs"))
       .join(e.groupBy("graph_id")
@@ -235,6 +234,16 @@ object FrequentSubtrees {
       }
   }
 
+  /** What [[transactionGraphs]] derives from the operator: whether it
+    * rejects cyclic transactions (the per-component isSubtree operators),
+    * and whose once-per-transaction samples it stores, if any. Mines whose
+    * operators agree on it can share prepared graphs. */
+  private def preparation(operator: EmbeddingOp): (Boolean, Option[EmbeddingOp]) = operator match {
+    case ExactSubtree | AbsImportant(_) | RelImportant(_) => (true, None)
+    case PsSampledOnce(_, _) | BpsSampledOnce(_, _) => (false, Some(operator))
+    case _ => (false, None)
+  }
+
   /** (graphId, [[GraphCtx]]) object-cached for the DFS miner, which scans
     * the transactions once per EXPANSION — dozens of passes per run, so the
     * per-graph lazy indexes surviving in the object cache pay for the
@@ -249,21 +258,25 @@ object FrequentSubtrees {
       .partitionBy(new org.apache.spark.HashPartitioner(p))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
+  /** Transaction graphs from [[prepareGraphs]] together with the operator
+    * they were prepared under. */
+  final case class PreparedGraphs(graphs: Dataset[TGraph], operator: EmbeddingOp)
+
   /** [[mine]]'s transaction-graph Dataset, exposed so a caller running
     * SEVERAL mines over the SAME DB (e.g. the operator-variant comparison
     * query) can derive + persist it once and pass it via `sharedGraphs`
     * instead of re-running the DB pipeline per mine (round-6.2). The caller
-    * owns the persist/unpersist. Only valid across operators that share the
-    * same per-transaction structures (no sample-once psForests/bpsLocal
-    * differences) — asserted by the callers' oracle gate. */
+    * owns the persist/unpersist of `graphs`. Only valid for mines whose
+    * operator needs the same per-transaction preparation (forest check and
+    * sample-once structures) — [[mine]] requires it. */
   def prepareGraphs(spark: SparkSession, verts: DataFrame, edges: DataFrame,
-      operator: EmbeddingOp): Dataset[TGraph] = {
+      operator: EmbeddingOp): PreparedGraphs = {
     val v = verts.select(col(verts.columns(0)).cast("long").as("graph_id"),
       col(verts.columns(1)).cast("long").as("vid"), col(verts.columns(2)).cast("string").as("vlabel"))
     val e = edges.select(col(edges.columns(0)).cast("long").as("graph_id"),
       col(edges.columns(1)).cast("long").as("src"), col(edges.columns(2)).cast("long").as("dst"),
       col(edges.columns(3)).cast("string").as("elabel"))
-    transactionGraphs(spark, v, e, operator)
+    PreparedGraphs(transactionGraphs(spark, v, e, operator), operator)
   }
 
   /** Mine frequent subtrees of sizes 1..maxPatternSize with support >=
@@ -272,8 +285,13 @@ object FrequentSubtrees {
   def mine(spark: SparkSession, verts: DataFrame, edges: DataFrame,
       threshold: Long, maxPatternSize: Int,
       operator: EmbeddingOp = ExactSubtree,
-      sharedGraphs: Option[Dataset[TGraph]] = None): DataFrame = {
+      sharedGraphs: Option[PreparedGraphs] = None): DataFrame = {
     import spark.implicits._
+    sharedGraphs.foreach { pg =>
+      require(preparation(pg.operator) == preparation(operator),
+        s"FrequentSubtrees.mine: graphs prepared under ${pg.operator} cannot be mined " +
+          s"under $operator (different forest check or sample-once structures)")
+    }
     // v/e each feed exactly ONE consumer since round-6.2 (transactionGraphs;
     // the level-1 occurrence and the alphabet read the graph cache), so they
     // are no longer persisted: the single combined plan lets the planner
@@ -295,7 +313,7 @@ object FrequentSubtrees {
     // at 2-3 levels. Reverted; the DFS miner (many passes per run) keeps
     // the object cache — see [[keyedGraphCtx]]/[[mineDfs]].
     val ownGraphs = sharedGraphs.isEmpty
-    val graphs: Dataset[TGraph] = sharedGraphs.getOrElse(
+    val graphs: Dataset[TGraph] = sharedGraphs.map(_.graphs).getOrElse(
       transactionGraphs(spark, v, e, operator).persist(StorageLevel.MEMORY_AND_DISK))
 
     // ---- level 1: frequent vertex labels (getFrequentVertices) ----

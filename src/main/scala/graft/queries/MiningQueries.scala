@@ -429,7 +429,7 @@ object MiningQueries {
       // of once per variant.
       val shared = graft.mining.FrequentSubtrees.prepareGraphs(s, v, e,
         graft.mining.FrequentSubtrees.HopsVariant(0, importance = 4, seed = 5150L))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      shared.graphs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val sc = s.sparkContext
       val group = sc.getLocalProperty("spark.jobGroup.id")
       val desc = sc.getLocalProperty("spark.job.description")
@@ -446,8 +446,9 @@ object MiningQueries {
           finally if (group == null) sc.clearJobGroup()
         }
       }
-      val parts = mined.map(Await.result(_, scala.concurrent.duration.Duration.Inf))
-      shared.unpersist(false)
+      val parts =
+        try mined.map(Await.result(_, scala.concurrent.duration.Duration.Inf))
+        finally shared.graphs.unpersist(false)
       // Collapse the three materialized per-variant results into ONE
       // checkpoint-materialized frame and free theirs, so the query honors
       // the miners' one-persisted-result contract (Bench sweeps for leaks).

@@ -7,8 +7,8 @@ package graft.queries
 object OracleSqlGen {
 
   /** Damped PageRank with dangling-mass redistribution, unrolled to a fixed
-    * iteration count as chained CTEs. Matches
-    * [[graft.algo.PageRank.runFixed]]: r0 = 1/n;
+    * iteration count as chained CTEs. Matches [[graft.algo.PageRank.run]]
+    * with `tol = 0.0, maxIter = iterations`: r0 = 1/n;
     * r_{k+1}(v) = (1-d)/n + d*dangling_k/n + d*sum_{u->v} r_k(u)/odeg(u).
     * Damping is written as (1 - (1-d)) so both engines parse the identical
     * decimal literal. Output: (vid BIGINT, rank DOUBLE rounded 6dp). */

@@ -52,7 +52,7 @@ class PageRankSpec extends AnyFunSuite with SparkTestBase {
   test("fixed-iteration variant matches fixed-iteration oracle exactly-ish") {
     val e = Generators.barabasiAlbert(30, 2, seed = 3L)
     val df = Generators.edgesDF(spark, e)
-    val got = PageRank.runFixed(spark, df, iterations = 5)
+    val got = PageRank.run(spark, df, tol = 0.0, maxIter = 5).ranks
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val want = ReferenceOracles.pageRankScalarFixed(e, 5)
     assertAllClose(got, want, 1e-12)

@@ -91,10 +91,26 @@ class TextExpressionsSpec extends AnyFunSuite with SparkTestBase {
   // ---- SimHash ----
 
   /** The retired explode/groupBy md5 formulation of Dedup.simHash (pre
-    * native expression) — the twin the md5 mode must match bitwise. One
-    * canonical copy, shared with the bench checksums. */
-  private def simHashExplodeTwin(docs: org.apache.spark.sql.DataFrame, bits: Int) =
-    graft.DebugSimhashBench.explodeMd5Twin(docs, bits)
+    * native expression) — the twin the md5 mode must match bitwise: explode
+    * to |tokens| rows, 2*bits vote columns, shuffle + groupBy back to one
+    * row per document. Expects doc_id/text columns. */
+  private def simHashExplodeTwin(docs: org.apache.spark.sql.DataFrame, bits: Int) = {
+    val tok = docs.select(col("doc_id").cast("long").as("key"),
+      explode(array_distinct(graft.text.TextOps.tokens(col("text")))).as("tok"))
+    val voteCols = (0 until bits).map { j =>
+      val c = ascii(substring(md5(col("tok")), 1 + j / 4, 1))
+      val nibble = when(c <= 57, c - 48).otherwise(c - 87)
+      val bit = shiftright(nibble.cast("int"), j % 4).bitwiseAND(lit(1))
+      (bit * 2 - 1).cast("long").as(s"v$j")
+    }
+    val votes = tok.select(col("key") +: voteCols: _*).groupBy("key")
+      .agg((0 until bits).map(j => sum(col(s"v$j")).as(s"s$j")).head,
+        (0 until bits).map(j => sum(col(s"v$j")).as(s"s$j")).tail: _*)
+    val hash = (0 until bits).map { j =>
+      when(col(s"s$j") > 0, lit(1L << j)).otherwise(lit(0L))
+    }.reduce(_ + _)
+    votes.select(col("key"), hash.cast("long").as("simhash"))
+  }
 
   private def randomDocs(seed: Int, n: Int) = {
     import spark.implicits._

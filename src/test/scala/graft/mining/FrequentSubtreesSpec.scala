@@ -155,6 +155,44 @@ class FrequentSubtreesSpec extends AnyFunSuite with SparkTestBase {
     assert(created == destroyed, s"DFS mine leaked broadcasts: created=$created destroyed=$destroyed")
   }
 
+  test("mine rejects shared graphs prepared under an operator with other per-transaction structures") {
+    val verts = Seq((0L, 0L, "a"), (0L, 1L, "a")).toDF("graph_id", "vid", "vlabel")
+    val edges = Seq((0L, 0L, 1L, "x")).toDF("graph_id", "src", "dst", "elabel")
+    val prepared = FrequentSubtrees.prepareGraphs(spark, verts, edges,
+      FrequentSubtrees.HopsVariant(0, importance = 4, seed = 1L))
+    intercept[IllegalArgumentException] {
+      FrequentSubtrees.mine(spark, verts, edges, threshold = 1L, maxPatternSize = 2,
+        operator = FrequentSubtrees.PsSampledOnce(k = 2, seed = 1L), sharedGraphs = Some(prepared))
+    }
+  }
+
+  test("GraphCtx serializes without its derived indexes; a deserialized copy answers the same") {
+    val g = FrequentSubtrees.TGraph(7L, Seq("a", "b", "a", "c"),
+      Seq((0, 1, "x"), (1, 2, "x"), (2, 3, "y")), psForests = Seq(Seq((0, 1, "x"), (1, 2, "x"))))
+    def bytes(o: AnyRef): Array[Byte] = {
+      val bos = new java.io.ByteArrayOutputStream
+      val oos = new java.io.ObjectOutputStream(bos)
+      oos.writeObject(o)
+      oos.close()
+      bos.toByteArray
+    }
+    val fresh = new FrequentSubtrees.GraphCtx(g)
+    val forced = new FrequentSubtrees.GraphCtx(g)
+    assert(forced.gt.n == 4 && forced.psLts.size == 1 && forced.comps.size == 1) // forces all three
+    val spilled = bytes(forced)
+    assert(spilled.length == bytes(fresh).length)
+    val copy = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(spilled))
+      .readObject().asInstanceOf[FrequentSubtrees.GraphCtx]
+    val ops = Seq(FrequentSubtrees.ExactSubtree, FrequentSubtrees.AbsImportant(1),
+      FrequentSubtrees.PsSampledOnce(1, 0L))
+    for (op <- ops; (vl, es, embeds) <- Seq(
+        (Seq("a", "b", "a"), Seq((0, 1, "x"), (1, 2, "x")), true),
+        (Seq("a", "c"), Seq((0, 1, "x")), false))) {
+      assert(FrequentSubtrees.embedsCtx(op, vl, es, forced) == embeds, s"$op $vl")
+      assert(FrequentSubtrees.embedsCtx(op, vl, es, copy) == embeds, s"$op $vl (copy)")
+    }
+  }
+
   test("treeEnumeration: unlabeled free-tree counts 1,1,1,2 and alphabet filtering") {
     // single frequent label + single triple -> free trees up to iso by size
     val verts = Seq((0L, 0L, "o"), (0L, 1L, "o")).toDF("graph_id", "vid", "vlabel")
