@@ -1,6 +1,6 @@
 package graft.algo
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, functions}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.graph.GraphOps
@@ -19,9 +19,10 @@ import graft.graph.GraphOps
   *
   * Scale design: each round is two groupBy-min + join passes; `min` is
   * algebraic so map-side combine absorbs hub skew. Rounds converge in
-  * O(log n). Termination = the edge multiset reached a fixpoint, detected
-  * with a cheap 3-aggregate checksum double-confirmed by an exact anti-join
-  * only when the checksum says "stable" (so the expensive check runs once).
+  * O(log n). Termination = the edge set reached a fixpoint, detected with
+  * the edge count observed on each round's checkpoint job and confirmed by
+  * an exact anti-join only when the count says "stable" (so the expensive
+  * check runs once). One action per round.
   */
 object ConnectedComponents {
 
@@ -38,17 +39,17 @@ object ConnectedComponents {
     allVerts.count()
 
     var e = initial
-    var eCount = e.count() // carried across rounds: one count job per round, not two
+    var eCount = e.count() // carried across rounds
     var round = 0
     var converged = eCount == 0L
     while (!converged && round < maxRounds) {
       // localCheckpoint truncates the per-round lineage growth (the iterative
-      // analogue of GraphFrames' checkpoint interval); eager, so it also
-      // materializes the round for the cheap convergence counts below.
-      val ss = smallStar(largeStar(e)).localCheckpoint(true)
+      // analogue of GraphFrames' checkpoint interval); the same eager job
+      // observes the round's edge count for the convergence test below.
+      val (ss, stats) = GraphOps.checkpointObserved(smallStar(largeStar(e)), Seq(functions.count(lit(1))))
       // Stable iff the (src,dst) set is unchanged; both sides are distinct
       // sets here so equal counts + empty anti-join is an exact test.
-      val ssCount = ss.count()
+      val ssCount = stats.getLong(0)
       converged = ssCount == eCount && ss.join(e, Seq("src", "dst"), "left_anti").isEmpty
       // `ss` is already checkpoint-materialized, so the superseded round's
       // CHECKPOINT blocks can be freed (plain unpersist cannot reach them)

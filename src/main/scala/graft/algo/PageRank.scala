@@ -26,14 +26,14 @@ import graft.run.IterationCheckpoint
   *  - the scatter `groupBy(dst).sum` is the single per-iteration shuffle;
   *    `sum` is algebraic so map-side partial aggregation absorbs hub skew
   *    (no salting needed for commutative message combination).
-  *  - per iteration: ONE eager localCheckpoint materializing the new vector
-  *    (truncating lineage — see LineageTruncateEvery for why every
-  *    iteration), then ONE convergence aggregate over `new ⋈ prev` (both
-  *    co-partitioned, exchange-free) computing the L-inf delta AND the
-  *    dangling rank mass of the new vector in the same pass; that mass is
-  *    exactly the scalar the NEXT iteration redistributes, so no separate
-  *    dangling-mass job (and no in-plan broadcast subquery whose exchange
-  *    would have to be re-executed) ever runs.
+  *  - per iteration: ONE action, the eager localCheckpoint materializing
+  *    the new vector (truncating lineage — see LineageTruncateEvery for why
+  *    every iteration). The new vector is `prev ⋈left contribs`, so the same
+  *    job observes the L-inf delta AND the dangling rank mass of the new
+  *    vector ([[GraphOps.checkpointObserved]]); that mass is exactly the
+  *    scalar the NEXT iteration redistributes, so no convergence job, no
+  *    separate dangling-mass job (and no in-plan broadcast subquery whose
+  *    exchange would have to be re-executed) ever runs.
   *  - superseded vectors release their checkpoint blocks deterministically
   *    (releaseVector), one generation behind, so executor storage holds at
   *    most three |V|-row vectors regardless of iteration count.
@@ -42,15 +42,14 @@ object PageRank {
 
   /** Cut the logical plan EVERY iteration (round-2 change). Measured on the
     * bench harness (BENCH.md): an eager localCheckpoint iteration costs the
-    * same executor-CPU and wall time as a pure-persist iteration (the delta
-    * action then reads the fresh checkpoint blocks instead of re-scanning
-    * the cache), while pure-persist iterations REGRESS with distance from
-    * the last cut — from the second iteration after a cut, each iteration
-    * re-executes one more upstream 128-task stage (task-count instrumented:
-    * 257 -> 385 -> 513...; the InMemoryRelation chained on a LogicalRDD stops
-    * being substituted), up to 10x iteration cost. Checkpoint-per-iteration
-    * makes every iteration flat and lets the superseded checkpoint's blocks
-    * be released deterministically. */
+    * same executor-CPU and wall time as a pure-persist iteration, while
+    * pure-persist iterations REGRESS with distance from the last cut — from
+    * the second iteration after a cut, each iteration re-executes one more
+    * upstream 128-task stage (task-count instrumented: 257 -> 385 -> 513...;
+    * the InMemoryRelation chained on a LogicalRDD stops being substituted),
+    * up to 10x iteration cost. Checkpoint-per-iteration makes every
+    * iteration flat and lets the superseded checkpoint's blocks be released
+    * deterministically. */
   private val LineageTruncateEvery = 1
 
   final case class Result(ranks: DataFrame, iterations: Int, delta: Double, numVertices: Long, numEdges: Long,
@@ -123,9 +122,10 @@ object PageRank {
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     val numEdges = adj.agg(coalesce(sum(size(col("nbrs"))), lit(0))).head().getLong(0)
-    val n = verts.count()
+    // before `e` is released: this materializes the verts cache built from it
+    val (n, danglingCount) = vertexCounts(verts)
     e.unpersist(false)
-    iterate(spark, adj, verts, n, numEdges, damping, tol, maxIter, p, checkpoint,
+    iterate(spark, adj, verts, n, danglingCount, numEdges, damping, tol, maxIter, p, checkpoint,
       onIterationsStart, onIterationEnd, setupT0)
   }
 
@@ -176,18 +176,26 @@ object PageRank {
       .repartition(p, col("vid"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val numEdges = adj.agg(coalesce(sum(size(col("nbrs"))), lit(0))).head().getLong(0)
-    val n = verts.count()
-    iterate(spark, adj, verts, n, numEdges, damping, tol, maxIter, p, checkpoint,
+    val (n, danglingCount) = vertexCounts(verts)
+    iterate(spark, adj, verts, n, danglingCount, numEdges, damping, tol, maxIter, p, checkpoint,
       onIterationsStart, onIterationEnd, setupT0)
   }
 
+  /** (vertices, dangling vertices) of `verts`(vid, dangling) in one job. */
+  private def vertexCounts(verts: DataFrame): (Long, Long) = {
+    val r = verts.agg(count(lit(1)), count_if(col("dangling"))).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
   /** The shared damped power-iteration loop over pre-persisted, co-partitioned
-    * `adj`(src, nbrs, odeg) and `verts`(vid, dangling). */
+    * `adj`(src, nbrs, odeg) and `verts`(vid, dangling) with `n` vertices,
+    * `danglingCount` of them dangling. */
   private def iterate(
       spark: SparkSession,
       adj: DataFrame,
       verts: DataFrame,
       n: Long,
+      danglingCount: Long,
       numEdges: Long,
       damping: Double,
       tol: Double,
@@ -213,18 +221,23 @@ object PageRank {
     // Resume support: start from the latest checkpointed iteration if present.
     // `danglingMass` is the rank mass sitting on dangling vertices in the
     // CURRENT vector — the scalar each iteration redistributes uniformly.
-    // For a resumed vector it costs one extra aggregate; for the uniform
-    // start it is danglingCount/n, computed in the same pass as nothing
-    // (the verts cache is already materialized).
+    // For a resumed vector it costs one aggregate, which also counts the
+    // snapshot's rows; for the uniform start it is danglingCount/n.
     val (startIter, startRanks, startMass) = checkpoint.flatMap(_.latest(spark)) match {
       case Some((it, df)) =>
-        val r = df.repartition(p, col("vid")).persist(StorageLevel.MEMORY_AND_DISK)
-        val m = r.agg(coalesce(sum(when(col("dangling"), col("rank")).otherwise(0.0)), lit(0.0))).head().getDouble(0)
-        (it, r, m)
+        val s = df.agg(count(lit(1)), coalesce(sum(when(col("dangling"), col("rank"))), lit(0.0))).head()
+        // the loop iterates the snapshot's own vertex set, so a snapshot of
+        // another graph must fail here rather than iterate with the wrong mass
+        if (s.getLong(0) != n) {
+          adj.unpersist(false)
+          verts.unpersist(false)
+          throw new IllegalArgumentException(
+            s"snapshot at iteration $it has ${s.getLong(0)} vertices, the graph has $n")
+        }
+        (it, df.repartition(p, col("vid")).persist(StorageLevel.MEMORY_AND_DISK), s.getDouble(1))
       case None =>
         val r0 = verts.select(col("vid"), lit(1.0 / n).as("rank"), col("dangling"))
           .persist(StorageLevel.MEMORY_AND_DISK)
-        val danglingCount = verts.where(col("dangling")).count()
         (0, r0, danglingCount.toDouble / n)
     }
 
@@ -252,35 +265,28 @@ object PageRank {
       val base = teleport + damping * danglingMass / n
       // The eager localCheckpoint (truncating lineage — see
       // LineageTruncateEvery's Scaladoc for the measured rationale)
-      // materializes the new vector. The checkpointed plan must NOT
-      // reference the previous vector directly: a join with `ranks` here
-      // would fold the predecessor's outputPartitioning/ordering expressions
-      // into each checkpoint's LogicalRDD, and the accumulated
-      // PartitioningCollection makes the localCheckpoint call itself grow
-      // without bound (measured: 0.2s -> 88s/iteration by iteration 25).
-      // The aggregate boundary below contribs resets the collection, so this
-      // plan's partitioning stays constant-size across iterations.
-      val next = verts
-        .join(contribs.hint(joinHint), Seq("vid"), "left")
-        .select(
-          col("vid"),
-          (lit(base) + lit(damping) * coalesce(col("contrib"), lit(0.0))).as("rank"),
-          col("dangling"))
-        .localCheckpoint(true)
+      // materializes the new vector, and the same job observes the L-inf
+      // delta and the next dangling mass. The previous vector is the LEFT
+      // side of a left-outer join, whose output partitioning is the left
+      // side's HashPartitioning(vid) alone, so every checkpoint's LogicalRDD
+      // carries the same one-expression partitioning. An inner join would
+      // report a PartitioningCollection of both sides instead; an earlier
+      // plan whose checkpoints accumulated such expressions made the
+      // localCheckpoint call itself grow without bound (measured: 0.2s ->
+      // 88s/iteration by iteration 25).
+      val (next, stats) = GraphOps.checkpointObserved(
+        ranks
+          .join(contribs.hint(joinHint), Seq("vid"), "left")
+          .select(
+            col("vid"),
+            (lit(base) + lit(damping) * coalesce(col("contrib"), lit(0.0))).as("rank"),
+            col("dangling"),
+            col("rank").as("prev")),
+        Seq(max(abs(col("rank") - col("prev"))), sum(when(col("dangling"), col("rank")).otherwise(0.0))),
+        drop = Seq("prev"))
       toRelease += ranks
-
-      // The convergence action: one co-partitioned (exchange-free) pass over
-      // the fresh checkpoint and its predecessor computes the per-step L-inf
-      // delta AND the next dangling mass (this plan is never checkpointed,
-      // so the partitioning-collection concern above does not apply).
-      val row = next.as("n")
-        .join(ranks.as("p").hint(joinHint), col("n.vid") === col("p.vid"))
-        .agg(
-          max(abs(col("n.rank") - col("p.rank"))).as("delta"),
-          sum(when(col("n.dangling"), col("n.rank")).otherwise(0.0)).as("m"))
-        .head()
-      delta = row.getDouble(0)
-      danglingMass = row.getDouble(1)
+      delta = stats.getDouble(0)
+      danglingMass = stats.getDouble(1)
 
       // Release the vector superseded TWO iterations ago (the direct parent
       // stays pinned until the new checkpoint is materialized by the action

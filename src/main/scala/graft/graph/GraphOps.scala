@@ -1,6 +1,8 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Shared edge-table plumbing (SURVEY.md §1.3, §4).
@@ -36,6 +38,21 @@ object GraphOps {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
       case _ => ()
     }
+  }
+
+  /** Eagerly localCheckpoint `df` minus the `drop` columns and read the
+    * aggregate `metrics` over `df` off that same job, so a loop's per-step
+    * scalars (a convergence delta, a count) cost no second action. The
+    * observation sits below no exchange, in the checkpoint job's result
+    * stage, where accumulator updates apply once per partition even when a
+    * stage is retried. The row holds the metrics in argument order. */
+  private[graft] def checkpointObserved(df: DataFrame, metrics: Seq[Column],
+      drop: Seq[String] = Nil): (DataFrame, Row) = {
+    val obs = Observation()
+    val cp = df.observe(obs, metrics.head, metrics.tail: _*).drop(drop: _*).localCheckpoint(true)
+    // metrics reach the Observation through the listener bus; bound the wait
+    // so an event the bus dropped fails the step instead of hanging it
+    (cp, Await.result(obs.future, 5.minutes))
   }
 
   /** Both directed half-edges per undirected edge (reference `loading.c:418-425`). */

@@ -1,14 +1,8 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.util.QueryExecutionListener
-import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.time.{Seconds, Span}
 import graft.fixtures.ReferenceOracles
 import graft.queries.Tables
 
@@ -16,35 +10,22 @@ import graft.queries.Tables
   * co-supplier graph. */
 class SparkEntrySpec extends AnyFunSuite with SparkTestBase {
 
-  /** Root paths of the file tables that the queries run by `body` scan. The
-    * oracle reads the same table, so its location is observed from the
-    * entry's own scans rather than restated here. */
-  private def scannedRoots(body: => Unit): Set[String] = {
-    val roots = new ConcurrentLinkedQueue[String]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        qe.analyzed.foreach {
-          case l: LogicalRelation => l.relation match {
-            case r: HadoopFsRelation => r.location.rootPaths.foreach(p => roots.add(p.toString))
-            case _ =>
-          }
-          case _ =>
+  /** Root paths of the file tables that the logged queries scan. The oracle
+    * reads the same table, so its location is observed from the entry's own
+    * scans rather than restated here. */
+  private def scannedRoots(log: ActionLog): Set[String] =
+    log.entries.flatMap { case (_, qe) =>
+      qe.analyzed.collect {
+        case l: LogicalRelation => l.relation match {
+          case r: HadoopFsRelation => r.location.rootPaths.map(_.toString)
+          case _ => Nil
         }
-      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      body
-      // listener events are delivered asynchronously
-      eventually(timeout(Span(30, Seconds))) { assert(!roots.isEmpty) }
-    } finally spark.listenerManager.unregister(listener)
-    roots.asScala.toSet
-  }
+      }.flatten
+    }.toSet
 
   test("entry: ranks ordered by rank desc then vid, sum to 1 and match the scalar oracle") {
-    var rows = Array.empty[(Long, Double)]
-    val roots = scannedRoots {
-      rows = SparkEntry.entry(spark).collect().map(r => (r.getLong(0), r.getDouble(1)))
+    val (rows, roots) = ActionLog.during(spark) { log =>
+      (SparkEntry.entry(spark).collect().map(r => (r.getLong(0), r.getDouble(1))), scannedRoots(log))
     }
     assert(rows.nonEmpty)
     rows.sliding(2).foreach { case Array((v1, r1), (v2, r2)) =>

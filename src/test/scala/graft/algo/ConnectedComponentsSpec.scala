@@ -1,7 +1,7 @@
 package graft.algo
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkTestBase
+import graft.{ActionLog, SparkTestBase}
 import graft.fixtures.{Generators, ReferenceOracles}
 
 class ConnectedComponentsSpec extends AnyFunSuite with SparkTestBase {
@@ -56,5 +56,21 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTestBase {
   test("component count (gf numberOfConnectedComponents equivalent)") {
     val e = Generators.twoComp
     assert(ConnectedComponents.count(spark, Generators.edgesDF(spark, e)) == 2L)
+  }
+
+  test("one action per round: each round's edge count rides on its checkpoint") {
+    val e = Generators.barabasiAlbert(100, 2, seed = 5L) ++
+      Generators.cycle(5).map { case (a, b) => (a + 1000, b + 1000) } ++
+      Generators.path(4).map { case (a, b) => (a + 2000, b + 2000) }
+    val (got, names) = ActionLog.during(spark)(log => (labels(e), log.names))
+    assert(got == ReferenceOracles.connectedComponentsMinVid(e))
+    // set-up counts the vertex cache and the initial edges; each round is
+    // its checkpoint, plus the anti-join confirmation once the counts agree;
+    // then the labels checkpoint and the collect
+    val rounds = names.count(_ == "localCheckpoint") - 1
+    val confirmations = names.count(_ == "isEmpty")
+    assert(rounds >= 2 && confirmations >= 1 && confirmations <= rounds, names)
+    assert(names.filterNot(_ == "isEmpty") ==
+      Seq("count", "count") ++ Seq.fill(rounds + 1)("localCheckpoint") :+ "collect", names)
   }
 }

@@ -1,8 +1,11 @@
 package graft.algo
 
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkTestBase
+import graft.{ActionLog, SparkTestBase}
 import graft.fixtures.{Generators, ReferenceOracles}
+import graft.graph.GraphOps
 
 class PageRankSpec extends AnyFunSuite with SparkTestBase {
 
@@ -125,5 +128,51 @@ class PageRankSpec extends AnyFunSuite with SparkTestBase {
     // lineage carries per-partition metrics across the restart
     val m = ck2.lineage.last
     assert(m.partitions.nonEmpty && m.rows == a.size)
+  }
+
+  test("one action per iteration: the iteration loop runs only its localCheckpoints") {
+    val df = Generators.edgesDF(spark, Generators.barabasiAlbert(40, 2, seed = 9L))
+    val loop = ActionLog.during(spark) { log =>
+      var start, end = -1
+      val r = PageRank.run(spark, df, tol = 0.0, maxIter = 6,
+        onIterationsStart = () => start = log.names.size,
+        onIterationEnd = _ => end = log.names.size)
+      GraphOps.releaseCheckpoint(r.ranks)
+      log.names.slice(start, end)
+    }
+    assert(loop == Seq.fill(6)("localCheckpoint"))
+  }
+
+  test("the rank vector's partitioning stays one hash expression across iterations") {
+    val df = Generators.edgesDF(spark, Generators.barabasiAlbert(40, 2, seed = 19L))
+    def partitioningAfter(iterations: Int) = {
+      val r = PageRank.run(spark, df, tol = 0.0, maxIter = iterations)
+      assert(r.iterations == iterations)
+      val part = r.ranks.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.outputPartitioning }
+      GraphOps.releaseCheckpoint(r.ranks)
+      part.getOrElse(fail("the returned vector is not a checkpoint"))
+    }
+    // a checkpoint keeps its plan's partitioning only without AQE (an
+    // adaptive plan reports none), which is how the link-graph runs execute
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val (early, late) = try (partitioningAfter(2), partitioningAfter(30))
+      finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    late match {
+      case h: HashPartitioning => assert(h.expressions.size == 1, h)
+      case other => fail(s"expected a HashPartitioning, got $other")
+    }
+    assert(late.getClass == early.getClass && late.numPartitions == early.numPartitions)
+  }
+
+  test("resuming from a snapshot of another graph throws") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-foreign").toString
+    val ck = graft.run.IterationCheckpoint(dir, every = 2)
+    val first = PageRank.run(spark, Generators.edgesDF(spark, Generators.barabasiAlbert(50, 2, seed = 13L)),
+      maxIter = 2, checkpoint = Some(ck))
+    GraphOps.releaseCheckpoint(first.ranks)
+    assert(ck.lineage.nonEmpty, "checkpoint wrote no manifests")
+    val other = Generators.edgesDF(spark, Generators.barabasiAlbert(60, 2, seed = 13L))
+    intercept[IllegalArgumentException](PageRank.run(spark, other, checkpoint = Some(ck)))
   }
 }

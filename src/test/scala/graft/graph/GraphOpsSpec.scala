@@ -7,6 +7,20 @@ import graft.fixtures.Generators
 
 class GraphOpsSpec extends AnyFunSuite with SparkTestBase {
 
+  test("checkpointObserved: observed count and sum equal a separate aggregate on a shuffled frame") {
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val df = spark.range(0, 5000).repartition(7)
+      .groupBy((col("id") % 97).as("k"))
+      .agg(sum(col("id")).as("s"), count(lit(1)).as("c"))
+    val (cp, row) = GraphOps.checkpointObserved(df, Seq(count(lit(1)), sum(col("s"))), drop = Seq("c"))
+    val want = df.agg(count(lit(1)), sum(col("s"))).head()
+    assert(row.getLong(0) == want.getLong(0) && row.getLong(1) == want.getLong(1))
+    assert(want.getLong(0) == 97L && want.getLong(1) == 4999L * 5000L / 2)
+    assert(cp.columns.toSeq == Seq("k", "s"))
+    assert(cp.agg(count(lit(1)), sum(col("s"))).head() == want)
+    GraphOps.releaseCheckpoint(cp)
+  }
+
   test("egoNets neighbors mode: K_4 ego of any center is the triangle on the other three") {
     val df = Generators.edgesDF(spark, Generators.clique(4))
     val ego = GraphOps.egoNets(df).collect()
