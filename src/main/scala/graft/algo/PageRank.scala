@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.graph.GraphOps
-import graft.run.IterationCheckpoint
+import graft.run.{IterationCheckpoint, SnapshotWriter}
 
 /** Damped power-iteration PageRank as aggregate-then-join DataFrame message
   * passing (SURVEY.md §2.8.4; BASELINE.json north_rule).
@@ -37,6 +37,13 @@ import graft.run.IterationCheckpoint
   *  - superseded vectors release their checkpoint blocks deterministically
   *    (releaseVector), one generation behind, so executor storage holds at
   *    most three |V|-row vectors regardless of iteration count.
+  *  - a rank snapshot ([[IterationCheckpoint]]) is one Spark job, written
+  *    on a background thread while the next iteration runs
+  *    ([[graft.run.SnapshotWriter]]): at most one is in flight, joined
+  *    before its vector is released, before the next snapshot starts and
+  *    before the loop returns. A failed iteration or snapshot joins the
+  *    snapshot in flight, releases every vector, `adj` and `verts`, and
+  *    rethrows the first failure.
   */
 object PageRank {
 
@@ -217,108 +224,119 @@ object PageRank {
     }
 
     val teleport = (1.0 - damping) / n
-
-    // Resume support: start from the latest checkpointed iteration if present.
-    // `danglingMass` is the rank mass sitting on dangling vertices in the
-    // CURRENT vector — the scalar each iteration redistributes uniformly.
-    // For a resumed vector it costs one aggregate, which also counts the
-    // snapshot's rows; for the uniform start it is danglingCount/n.
-    val (startIter, startRanks, startMass) = checkpoint.flatMap(_.latest(spark)) match {
-      case Some((it, df)) =>
-        val s = df.agg(count(lit(1)), coalesce(sum(when(col("dangling"), col("rank"))), lit(0.0))).head()
-        // the loop iterates the snapshot's own vertex set, so a snapshot of
-        // another graph must fail here rather than iterate with the wrong mass
-        if (s.getLong(0) != n) {
-          adj.unpersist(false)
-          verts.unpersist(false)
-          throw new IllegalArgumentException(
-            s"snapshot at iteration $it has ${s.getLong(0)} vertices, the graph has $n")
-        }
-        (it, df.repartition(p, col("vid")).persist(StorageLevel.MEMORY_AND_DISK), s.getDouble(1))
-      case None =>
-        val r0 = verts.select(col("vid"), lit(1.0 / n).as("rank"), col("dangling"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        (0, r0, danglingCount.toDouble / n)
-    }
-
-    var ranks = startRanks
-    var danglingMass = startMass
-    var delta = Double.MaxValue
-    var iter = startIter
-    val setupSecs = (System.nanoTime() - setupT0) / 1e9
-    onIterationsStart() // lets harnesses snapshot metrics at the setup/loop boundary
-    val loopT0 = System.nanoTime()
-    val iterTimes = scala.collection.mutable.ArrayBuffer[Double]()
+    val snapshots = checkpoint.map(new SnapshotWriter(_))
+    // superseded vectors not yet released, oldest first
     val toRelease = scala.collection.mutable.ArrayBuffer[DataFrame]()
-
-    val joinHint = "shuffle_hash"
-    while (delta >= tol && iter < maxIter) {
-      val iterT0 = System.nanoTime()
-      // Gather-scatter: fan rank/odeg out over the CSR rows (map-side explode,
-      // never inside the join), partial-agg, one exchange on vid, final agg.
-      // Build side = narrow ranks rows; the array-bearing adj side streams.
-      val contribs = ranks.as("r").hint(joinHint)
-        .join(adj.as("l"), col("r.vid") === col("l.src"))
-        .select((col("r.rank") / col("l.odeg")).as("w"), explode(col("l.nbrs")).as("vid"))
-        .groupBy(col("vid"))
-        .agg(sum(col("w")).as("contrib"))
-      val base = teleport + damping * danglingMass / n
-      // The eager localCheckpoint (truncating lineage — see
-      // LineageTruncateEvery's Scaladoc for the measured rationale)
-      // materializes the new vector, and the same job observes the L-inf
-      // delta and the next dangling mass. The previous vector is the LEFT
-      // side of a left-outer join, whose output partitioning is the left
-      // side's HashPartitioning(vid) alone, so every checkpoint's LogicalRDD
-      // carries the same one-expression partitioning. An inner join would
-      // report a PartitioningCollection of both sides instead; an earlier
-      // plan whose checkpoints accumulated such expressions made the
-      // localCheckpoint call itself grow without bound (measured: 0.2s ->
-      // 88s/iteration by iteration 25).
-      val (next, stats) = GraphOps.checkpointObserved(
-        ranks
-          .join(contribs.hint(joinHint), Seq("vid"), "left")
-          .select(
-            col("vid"),
-            (lit(base) + lit(damping) * coalesce(col("contrib"), lit(0.0))).as("rank"),
-            col("dangling"),
-            col("rank").as("prev")),
-        Seq(max(abs(col("rank") - col("prev"))), sum(when(col("dangling"), col("rank")).otherwise(0.0))),
-        drop = Seq("prev"))
-      toRelease += ranks
-      delta = stats.getDouble(0)
-      danglingMass = stats.getDouble(1)
-
-      // Release the vector superseded TWO iterations ago (the direct parent
-      // stays pinned until the new checkpoint is materialized by the action
-      // above, so a lost block can still recompute — ADVICE round 1). For a
-      // checkpointed DF, `unpersist` on the DataFrame is a no-op; the blocks
-      // belong to the internal checkpointed RDD, released via releaseVector.
-      if (toRelease.size >= 2) {
-        releaseVector(toRelease.remove(0))
-        // Old shuffles/broadcasts are only dropped when the driver's
-        // ContextCleaner processes dead weak references (i.e. on a driver
-        // GC); on a large-heap driver that can lag a long benchmark run,
-        // accumulating shuffle files. The nudge is a HARNESS concern, so it
-        // is opt-IN (GRAFT_PR_GC, set by BenchWorker) — library callers
-        // never pay a forced full GC (ADVICE round 2).
-        if (iter % 5 == 0 && sys.env.contains("GRAFT_PR_GC")) System.gc()
+    var ranks: DataFrame = null
+    try {
+      // Resume support: start from the latest checkpointed iteration if present.
+      // `danglingMass` is the rank mass sitting on dangling vertices in the
+      // CURRENT vector — the scalar each iteration redistributes uniformly.
+      // For a resumed vector it costs one aggregate, which also counts the
+      // snapshot's rows; for the uniform start it is danglingCount/n.
+      val (startIter, startRanks, startMass) = checkpoint.flatMap(_.latest(spark)) match {
+        case Some((it, df)) =>
+          val s = df.agg(count(lit(1)), coalesce(sum(when(col("dangling"), col("rank"))), lit(0.0))).head()
+          // the loop iterates the snapshot's own vertex set, so a snapshot of
+          // another graph must fail here rather than iterate with the wrong mass
+          if (s.getLong(0) != n)
+            throw new IllegalArgumentException(
+              s"snapshot at iteration $it has ${s.getLong(0)} vertices, the graph has $n")
+          (it, df.repartition(p, col("vid")).persist(StorageLevel.MEMORY_AND_DISK), s.getDouble(1))
+        case None =>
+          val r0 = verts.select(col("vid"), lit(1.0 / n).as("rank"), col("dangling"))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+          (0, r0, danglingCount.toDouble / n)
       }
-      ranks = next
-      iter += 1
-      iterTimes += (System.nanoTime() - iterT0) / 1e9
-      onIterationEnd(iter)
-      checkpoint.foreach(_.maybeWrite(iter, delta, ranks.select("vid", "rank", "dangling")))
-    }
 
-    // The returned `ranks` is never in the buffer (only superseded vectors
-    // are added), so release EVERYTHING still queued — the final checkpoint
-    // is already materialized and owns its own blocks (ADVICE round 2: the
-    // old dropRight(1) left the last predecessor resident forever).
-    toRelease.foreach(releaseVector)
-    adj.unpersist(false)
-    verts.unpersist(false)
-    Result(ranks.select(col("vid"), col("rank")), iter, delta, n, numEdges,
-      setupSecs, (System.nanoTime() - loopT0) / 1e9, iterTimes.toSeq)
+      ranks = startRanks
+      var danglingMass = startMass
+      var delta = Double.MaxValue
+      var iter = startIter
+      val setupSecs = (System.nanoTime() - setupT0) / 1e9
+      onIterationsStart() // lets harnesses snapshot metrics at the setup/loop boundary
+      val loopT0 = System.nanoTime()
+      val iterTimes = scala.collection.mutable.ArrayBuffer[Double]()
+
+      val joinHint = "shuffle_hash"
+      while (delta >= tol && iter < maxIter) {
+        val iterT0 = System.nanoTime()
+        // Gather-scatter: fan rank/odeg out over the CSR rows (map-side explode,
+        // never inside the join), partial-agg, one exchange on vid, final agg.
+        // Build side = narrow ranks rows; the array-bearing adj side streams.
+        val contribs = ranks.as("r").hint(joinHint)
+          .join(adj.as("l"), col("r.vid") === col("l.src"))
+          .select((col("r.rank") / col("l.odeg")).as("w"), explode(col("l.nbrs")).as("vid"))
+          .groupBy(col("vid"))
+          .agg(sum(col("w")).as("contrib"))
+        val base = teleport + damping * danglingMass / n
+        // The eager localCheckpoint (truncating lineage — see
+        // LineageTruncateEvery's Scaladoc for the measured rationale)
+        // materializes the new vector, and the same job observes the L-inf
+        // delta and the next dangling mass. The previous vector is the LEFT
+        // side of a left-outer join, whose output partitioning is the left
+        // side's HashPartitioning(vid) alone, so every checkpoint's LogicalRDD
+        // carries the same one-expression partitioning. An inner join would
+        // report a PartitioningCollection of both sides instead; an earlier
+        // plan whose checkpoints accumulated such expressions made the
+        // localCheckpoint call itself grow without bound (measured: 0.2s ->
+        // 88s/iteration by iteration 25).
+        val (next, stats) = GraphOps.checkpointObserved(
+          ranks
+            .join(contribs.hint(joinHint), Seq("vid"), "left")
+            .select(
+              col("vid"),
+              (lit(base) + lit(damping) * coalesce(col("contrib"), lit(0.0))).as("rank"),
+              col("dangling"),
+              col("rank").as("prev")),
+          Seq(max(abs(col("rank") - col("prev"))), sum(when(col("dangling"), col("rank")).otherwise(0.0))),
+          drop = Seq("prev"))
+        toRelease += ranks
+        ranks = next
+        delta = stats.getDouble(0)
+        danglingMass = stats.getDouble(1)
+
+        // Release the vector superseded TWO iterations ago (the direct parent
+        // stays pinned until the new checkpoint is materialized by the action
+        // above, so a lost block can still recompute — ADVICE round 1). For a
+        // checkpointed DF, `unpersist` on the DataFrame is a no-op; the blocks
+        // belong to the internal checkpointed RDD, released via releaseVector.
+        // A snapshot still reading that vector is joined first.
+        if (toRelease.size >= 2) {
+          snapshots.foreach(_.beforeRelease(toRelease.head))
+          releaseVector(toRelease.remove(0))
+          // Old shuffles/broadcasts are only dropped when the driver's
+          // ContextCleaner processes dead weak references (i.e. on a driver
+          // GC); on a large-heap driver that can lag a long benchmark run,
+          // accumulating shuffle files. The nudge is a HARNESS concern, so it
+          // is opt-IN (GRAFT_PR_GC, set by BenchWorker) — library callers
+          // never pay a forced full GC (ADVICE round 2).
+          if (iter % 5 == 0 && sys.env.contains("GRAFT_PR_GC")) System.gc()
+        }
+        iter += 1
+        iterTimes += (System.nanoTime() - iterT0) / 1e9
+        onIterationEnd(iter)
+        snapshots.foreach(_.maybeStart(iter, delta, ranks.select("vid", "rank", "dangling")))
+      }
+      snapshots.foreach(_.await())
+      Result(ranks.select(col("vid"), col("rank")), iter, delta, n, numEdges,
+        setupSecs, (System.nanoTime() - loopT0) / 1e9, iterTimes.toSeq)
+    } catch {
+      case t: Throwable =>
+        // the first failure propagates; a snapshot still in flight is joined
+        // before the vector it reads is released
+        try snapshots.foreach(_.await()) catch { case s: Throwable => t.addSuppressed(s) }
+        if (ranks != null) releaseVector(ranks)
+        throw t
+    } finally {
+      // The returned `ranks` is never in the buffer (only superseded vectors
+      // are added), so release EVERYTHING still queued — the final checkpoint
+      // is already materialized and owns its own blocks (ADVICE round 2: the
+      // old dropRight(1) left the last predecessor resident forever).
+      toRelease.foreach(releaseVector)
+      adj.unpersist(false)
+      verts.unpersist(false)
+    }
   }
 
   /** Free the storage behind a superseded rank vector: cached plans

@@ -40,20 +40,26 @@ object GraphOps {
     }
   }
 
-  /** Eagerly localCheckpoint `df` minus the `drop` columns and read the
-    * aggregate `metrics` over `df` off that same job, so a loop's per-step
-    * scalars (a convergence delta, a count) cost no second action. The
-    * observation sits below no exchange, in the checkpoint job's result
-    * stage, where accumulator updates apply once per partition even when a
-    * stage is retried. The row holds the metrics in argument order. */
-  private[graft] def checkpointObserved(df: DataFrame, metrics: Seq[Column],
-      drop: Seq[String] = Nil): (DataFrame, Row) = {
+  /** Run `action` on `df` with the aggregate `metrics` observed on it and
+    * return its result with the observed row (metrics in argument order),
+    * so the metrics cost no second action. Callers keep the observation in
+    * the action's result stage (no exchange above it), where accumulator
+    * updates apply once per partition even when a stage is retried. */
+  private[graft] def withObservation[T](df: DataFrame, metrics: Seq[Column])(action: DataFrame => T): (T, Row) = {
     val obs = Observation()
-    val cp = df.observe(obs, metrics.head, metrics.tail: _*).drop(drop: _*).localCheckpoint(true)
+    val out = action(df.observe(obs, metrics.head, metrics.tail: _*))
     // metrics reach the Observation through the listener bus; bound the wait
     // so an event the bus dropped fails the step instead of hanging it
-    (cp, Await.result(obs.future, 5.minutes))
+    (out, Await.result(obs.future, 5.minutes))
   }
+
+  /** Eagerly localCheckpoint `df` minus the `drop` columns and read the
+    * aggregate `metrics` over `df` off that same job ([[withObservation]]),
+    * so a loop's per-step scalars (a convergence delta, a count) cost no
+    * second action. */
+  private[graft] def checkpointObserved(df: DataFrame, metrics: Seq[Column],
+      drop: Seq[String] = Nil): (DataFrame, Row) =
+    withObservation(df, metrics)(_.drop(drop: _*).localCheckpoint(true))
 
   /** Both directed half-edges per undirected edge (reference `loading.c:418-425`). */
   def symmetrize(edges: DataFrame): DataFrame = {

@@ -34,6 +34,9 @@ final class ActionLog private (spark: SparkSession) extends QueryExecutionListen
 object ActionLog {
   /** Run `body` with a fresh log registered; the log is unregistered after. */
   def during[T](spark: SparkSession)(body: ActionLog => T): T = {
+    // an action that returned before the log existed may still have its
+    // event queued; deliver it first so the new log cannot record it
+    TestListenerBus.drain(spark.sparkContext)
     val log = new ActionLog(spark)
     spark.listenerManager.register(log)
     try body(log) finally log.close()

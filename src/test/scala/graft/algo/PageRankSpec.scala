@@ -175,4 +175,33 @@ class PageRankSpec extends AnyFunSuite with SparkTestBase {
     val other = Generators.edgesDF(spark, Generators.barabasiAlbert(60, 2, seed = 13L))
     intercept[IllegalArgumentException](PageRank.run(spark, other, checkpoint = Some(ck)))
   }
+
+  test("each snapshot holds its own iteration's vector although the loop ran on") {
+    val df = Generators.edgesDF(spark, Generators.barabasiAlbert(40, 2, seed = 29L))
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-async").toString
+    val ck = graft.run.IterationCheckpoint(dir, every = 2)
+    val r = PageRank.run(spark, df, tol = 0.0, maxIter = 6, checkpoint = Some(ck))
+    GraphOps.releaseCheckpoint(r.ranks)
+    val lineage = ck.lineage
+    assert(lineage.map(_.iteration) == Seq(2, 4, 6))
+    for (m <- lineage) {
+      val snap = spark.read.parquet(s"$dir/data/snap-${m.snapshotId}")
+        .select("vid", "rank").collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val fixed = PageRank.run(spark, df, tol = 0.0, maxIter = m.iteration)
+      val want = fixed.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      GraphOps.releaseCheckpoint(fixed.ranks)
+      assertAllClose(snap, want, 1e-12)
+    }
+  }
+
+  test("a failed snapshot fails the run with its own error and leaks no cache") {
+    val df = Generators.edgesDF(spark, Generators.barabasiAlbert(40, 2, seed = 31L))
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-broken")
+    java.nio.file.Files.createFile(dir.resolve("data")) // the snapshot cannot create its data directory
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[java.io.IOException](
+      PageRank.run(spark, df, tol = 0.0, maxIter = 6, checkpoint = Some(graft.run.IterationCheckpoint(dir.toString, 2))))
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"persisted RDDs left behind: $leaked")
+  }
 }

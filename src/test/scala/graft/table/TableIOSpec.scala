@@ -1,7 +1,10 @@
 package graft.table
 
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkTestBase
+import graft.{ActionLog, SparkTestBase}
 
 class TableIOSpec extends AnyFunSuite with SparkTestBase {
 
@@ -25,6 +28,45 @@ class TableIOSpec extends AnyFunSuite with SparkTestBase {
     assert(lin.last.metrics("delta") == 0.1)
     assert(lin.forall(_.partitions.nonEmpty))
     assert(lin.map(m => m.partitions.map(_.rows).sum) == Seq(2L, 3L))
+  }
+
+  private def tempRoot(): String = java.nio.file.Files.createTempDirectory("graft-tableio").toString
+
+  test("the manifest's partition stats are the written frame's, and describe the files on disk") {
+    val df = spark.range(0, 1000, 1, 4).selectExpr("id", "cast(id % 7 as string) as v")
+    val root = tempRoot()
+    val m = TableIO.commit(df, root, iteration = 1)
+    assert(m.partitions.size == 4 && m.rows == 1000)
+    assert(m.partitions == TableIO.partitionStats(df))
+    val back = TableIO.partitionStats(TableIO.readLatest(spark, root).get._2)
+    def bag(ps: Seq[TableIO.PartitionStat]) = ps.map(p => (p.rows, p.checksum)).groupBy(identity).view.mapValues(_.size).toMap
+    assert(bag(m.partitions) == bag(back))
+    assert(TableIO.lineage(root) == Seq(m))
+  }
+
+  test("a commit is one SQL action") {
+    val df = spark.range(0, 100, 1, 4).toDF("id")
+    val root = tempRoot()
+    val names = ActionLog.during(spark) { log =>
+      TableIO.commit(df, root, iteration = 1)
+      log.names
+    }
+    assert(names.size == 1, names)
+  }
+
+  test("empty frames commit with no partitions, AQE on and off") {
+    val noPartitions = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType(Seq(StructField("id", LongType))))
+    val filteredEmpty = spark.range(0, 100, 1, 4).toDF("id").where(col("id") < 0)
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try for (adaptive <- Seq("true", "false"); df <- Seq(noPartitions, filteredEmpty)) {
+      spark.conf.set("spark.sql.adaptive.enabled", adaptive)
+      val t0 = System.nanoTime()
+      val m = TableIO.commit(df, tempRoot(), iteration = 1)
+      // the observation's wait is bounded at 5 minutes; an empty write must not lean on it
+      assert((System.nanoTime() - t0) / 1e9 < 60, s"AQE $adaptive")
+      assert(m.rows == 0 && m.partitions.isEmpty, s"AQE $adaptive: $m")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
   test("multimodal stub decode plumbing: schema + determinism across partitionings") {
