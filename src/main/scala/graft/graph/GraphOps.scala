@@ -18,11 +18,14 @@ object GraphOps {
 
   /** Normalize an arbitrary two-column frame into a canonical directed edge
     * table (long src/dst, no self-loops, deduplicated). */
-  def canonicalEdges(edges: DataFrame): DataFrame =
+  def canonicalEdges(edges: DataFrame): DataFrame = endpoints(edges).distinct()
+
+  /** [[canonicalEdges]] without the dedupe, for callers that dedupe later
+    * anyway (each `distinct` is an exchange of its own). */
+  private[graft] def endpoints(edges: DataFrame): DataFrame =
     edges
       .select(col(edges.columns(0)).cast("long").as("src"), col(edges.columns(1)).cast("long").as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-      .distinct()
 
   /** Free the storage behind a superseded iteration frame. Cached plans
     * unpersist through the CacheManager, but a localCheckpoint'd frame holds
@@ -63,7 +66,7 @@ object GraphOps {
 
   /** Both directed half-edges per undirected edge (reference `loading.c:418-425`). */
   def symmetrize(edges: DataFrame): DataFrame = {
-    val e = canonicalEdges(edges)
+    val e = endpoints(edges)
     e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct()
   }
 
@@ -75,19 +78,6 @@ object GraphOps {
     * Map-side partial aggregation makes this skew-tolerant for hub vertices. */
   def degrees(edges: DataFrame): DataFrame =
     symmetrize(edges).groupBy(col("src").as("vid")).agg(count(lit(1)).as("degree"))
-
-  /** Out-degree on the directed edge table. */
-  def outDegrees(edges: DataFrame): DataFrame =
-    canonicalEdges(edges).groupBy(col("src").as("vid")).agg(count(lit(1)).as("odeg"))
-
-  /** CSR-style adjacency blocks: one row per vertex with the sorted neighbor
-    * array (SURVEY.md §2.10 — `sort_array(collect_list)` is the built-in CSR
-    * build; a typed Aggregator is the fallback if memory pressure demands). */
-  def adjacency(edges: DataFrame, directed: Boolean = false): DataFrame = {
-    val e = if (directed) canonicalEdges(edges) else symmetrize(edges)
-    e.groupBy(col("src"))
-      .agg(sort_array(collect_set(col("dst"))).as("neighbors"))
-  }
 
   /** Neighborhood generator (reference `executables/neighborhoodGenerator.c`,
     * help `neighborhoodGeneratorHelp.txt`): explode each vertex's 1-hop
@@ -130,16 +120,6 @@ object GraphOps {
         least(col("src"), col("dst")).as("src"), greatest(col("src"), col("dst")).as("dst")))
     }
   }
-
-  /** Hash-partition an edge table by a key column for iteration reuse
-    * (SURVEY.md §4 "what we must write"). */
-  def partitionBy(df: DataFrame, key: String, numPartitions: Int): DataFrame =
-    df.repartition(numPartitions, col(key))
-
-  /** Top-k hub vertices by degree — candidates for broadcast handling /
-    * salting under power-law skew (SURVEY.md §7.4.1). */
-  def hubs(edges: DataFrame, k: Int): DataFrame =
-    degrees(edges).orderBy(desc("degree"), asc("vid")).limit(k)
 
   /** Number of shuffle partitions configured on the session; the engine keys
     * every iteration-reused exchange off this single knob. */

@@ -97,4 +97,19 @@ class GraphOpsSpec extends AnyFunSuite with SparkTestBase {
       .collect().map(r => Option(r.getString(0)))
     assert(got.toSeq == Seq(Some("H"), Some("RH"), Some("AC"), None))
   }
+
+  test("symmetrize equals canonicalEdges mirrored and deduped on messy int-typed input") {
+    import spark.implicits._
+    val df = Seq[(Option[Int], Option[Int])](
+      (Some(1), Some(2)), (Some(1), Some(2)), (Some(2), Some(1)), (Some(2), Some(3)),
+      (Some(3), Some(3)), (None, Some(4)), (Some(5), None), (None, None), (Some(5), Some(4)))
+      .toDF("a", "b")
+    def rows(d: org.apache.spark.sql.DataFrame) = d.collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
+    val c = GraphOps.canonicalEdges(df)
+    val want = rows(c.union(c.select(col("dst").as("src"), col("src").as("dst"))).distinct())
+    val got = rows(GraphOps.symmetrize(df))
+    assert(got.size == got.distinct.size)
+    assert(got.toSet == want.toSet)
+    assert(want.toSet == Set(1L -> 2L, 2L -> 1L, 2L -> 3L, 3L -> 2L, 5L -> 4L, 4L -> 5L))
+  }
 }
