@@ -30,6 +30,14 @@ import graft.graph.GraphOps
   */
 object LabelPropagation {
 
+  /** [[GraphOps.symmetrize]] hash-partitioned by `dst` (the key every round
+    * joins labels on) with ONE exchange: the hash partitioning on `dst`
+    * already satisfies the distinct's clustering, as in CC's `dedupe`, where
+    * `symmetrize` followed by a repartition would shuffle on (src, dst) and
+    * then again on `dst`. */
+  private def symmetricEdges(edges: DataFrame, p: Int): DataFrame =
+    GraphOps.bothDirections(edges).repartition(p, col("dst")).distinct()
+
   /** One WL refinement round over string labels: returns (vid, signature)
     * with the exact signature string `ownLabel:nbr1,nbr2,...` (sorted),
     * mirroring reference `getWLLabel` (`weisfeilerLehman.c:19-56`, qsort at
@@ -50,7 +58,7 @@ object LabelPropagation {
     * (ids differ from the trie's insertion-order ids by a bijection). */
   def wlRefine(spark: SparkSession, edges: DataFrame, initialLabels: DataFrame, rounds: Int): DataFrame = {
     val p = GraphOps.defaultParallelism(spark)
-    val sym = GraphOps.symmetrize(edges).repartition(p, col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
+    val sym = symmetricEdges(edges, p).persist(StorageLevel.MEMORY_AND_DISK)
     var labels = initialLabels
       .select(col(initialLabels.columns(0)).cast("long").as("vid"),
         xxhash64(col(initialLabels.columns(1)).cast("string")).as("label"))
@@ -86,7 +94,7 @@ object LabelPropagation {
     * partitions on fixtures. */
   def wlRefineHashed(spark: SparkSession, edges: DataFrame, initialLabels: DataFrame, rounds: Int): DataFrame = {
     val p = GraphOps.defaultParallelism(spark)
-    val sym = GraphOps.symmetrize(edges).repartition(p, col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
+    val sym = symmetricEdges(edges, p).persist(StorageLevel.MEMORY_AND_DISK)
     var labels = initialLabels
       .select(col(initialLabels.columns(0)).cast("long").as("vid"),
         xxhash64(col(initialLabels.columns(1)).cast("string")).as("label"))
@@ -136,7 +144,7 @@ object LabelPropagation {
     val iterate = rounds > 1
     def cached(df: DataFrame): DataFrame =
       if (iterate) df.persist(StorageLevel.MEMORY_AND_DISK) else df
-    val sym = cached(GraphOps.symmetrize(edges).repartition(p, col("dst")))
+    val sym = cached(symmetricEdges(edges, p))
     val verts = cached(GraphOps.vertices(sym))
     var labels = cached(initialLabels
       .map(df => df.select(col(df.columns(0)).cast("long").as("vid"), col(df.columns(1)).cast("long").as("label")))

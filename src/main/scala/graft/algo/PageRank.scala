@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.graph.GraphOps
-import graft.run.{IterationCheckpoint, SnapshotWriter}
+import graft.run.{IterationCheckpoint, PreparedStep, SnapshotWriter}
 
 /** Damped power-iteration PageRank as aggregate-then-join DataFrame message
   * passing (SURVEY.md §2.8.4; BASELINE.json north_rule).
@@ -26,14 +26,34 @@ import graft.run.{IterationCheckpoint, SnapshotWriter}
   *  - the scatter `groupBy(dst).sum` is the single per-iteration shuffle;
   *    `sum` is algebraic so map-side partial aggregation absorbs hub skew
   *    (no salting needed for commutative message combination).
-  *  - per iteration: ONE action, the eager localCheckpoint materializing
+  *  - per iteration: ONE action, the eager local checkpoint materializing
   *    the new vector (truncating lineage — see LineageTruncateEvery for why
   *    every iteration). The new vector is `prev ⋈left contribs`, so the same
   *    job observes the L-inf delta AND the dangling rank mass of the new
-  *    vector ([[GraphOps.checkpointObserved]]); that mass is exactly the
-  *    scalar the NEXT iteration redistributes, so no convergence job, no
-  *    separate dangling-mass job (and no in-plan broadcast subquery whose
-  *    exchange would have to be re-executed) ever runs.
+  *    vector; that mass is exactly the scalar the NEXT iteration
+  *    redistributes, so no convergence job, no separate dangling-mass job
+  *    (and no in-plan broadcast subquery whose exchange would have to be
+  *    re-executed) ever runs.
+  *  - the iteration is planned ONCE ([[graft.run.PreparedStep]]): set-up
+  *    stores the start vector as a checkpoint and prepares the step's
+  *    physical plan over it; every iteration runs a copy of that plan with
+  *    the previous vector's checkpoint RDD and the redistributed-mass
+  *    scalar `base` re-bound, so no iteration analyzes, optimizes, plans or
+  *    compiles anything (re-planning the same query took about half of a
+  *    0.21 s iteration on `powerLawEdges(6000, 8, 1)`, `local[4]` on 4
+  *    vCPUs). The plan is prepared WITHOUT adaptive
+  *    execution whatever the session says: an adaptive plan re-plans its
+  *    later stages from the logical plan, which still names the start
+  *    vector. `base` is read by reference in the generated code, so the
+  *    re-bound plan generates the same source every iteration. The step's
+  *    exchanges use the vector's partition count (`numPartitions`), not
+  *    the session's shuffle partitions, so each new vector is laid out as
+  *    the co-partitioned `ranks ⋈ adj` of the next iteration expects.
+  *  - checkpoints are stored serialized (MEMORY_AND_DISK_SER): a
+  *    deserialized store estimates the size of the growing row buffer with
+  *    `SizeEstimator` about log1.1(n) times per partition, which held 64%
+  *    of the wall-clock stack samples of an iteration's result tasks on the
+  *    same run.
   *  - superseded vectors release their checkpoint blocks deterministically
   *    (releaseVector), one generation behind, so executor storage holds at
   *    most three |V|-row vectors regardless of iteration count.
@@ -242,14 +262,47 @@ object PageRank {
           if (s.getLong(0) != n)
             throw new IllegalArgumentException(
               s"snapshot at iteration $it has ${s.getLong(0)} vertices, the graph has $n")
-          (it, df.repartition(p, col("vid")).persist(StorageLevel.MEMORY_AND_DISK), s.getDouble(1))
+          (it, df.select("vid", "rank", "dangling"), s.getDouble(1))
         case None =>
-          val r0 = verts.select(col("vid"), lit(1.0 / n).as("rank"), col("dangling"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          (0, r0, danglingCount.toDouble / n)
+          (0, verts.select(col("vid"), lit(1.0 / n).as("rank"), col("dangling")), danglingCount.toDouble / n)
       }
+      // the start vector is a checkpoint like every later one, so every
+      // iteration runs the one prepared step
+      ranks = PreparedStep.checkpoint(startRanks.repartition(p, col("vid")))
 
-      ranks = startRanks
+      // Gather-scatter: fan rank/odeg out over the CSR rows (map-side explode,
+      // never inside the join), partial-agg, one exchange on vid, final agg.
+      // Build side = narrow ranks rows; the array-bearing adj side streams.
+      val joinHint = "shuffle_hash"
+      val contribs = ranks.as("r").hint(joinHint)
+        .join(adj.as("l"), col("r.vid") === col("l.src"))
+        .select((col("r.rank") / col("l.odeg")).as("w"), explode(col("l.nbrs")).as("vid"))
+        .groupBy(col("vid"))
+        .agg(sum(col("w")).as("contrib"))
+      // `base = teleport + damping * danglingMass / n` changes every
+      // iteration, so it is the step's re-bound scalar, not a literal.
+      // The step's checkpoint (truncating lineage — see
+      // LineageTruncateEvery's Scaladoc for the measured rationale)
+      // materializes the new vector, and the same job observes the L-inf
+      // delta and the next dangling mass. The previous vector is the LEFT
+      // side of a left-outer join, whose output partitioning is the left
+      // side's HashPartitioning(vid) alone, so every checkpoint carries the
+      // same one-expression partitioning. An inner join would report a
+      // PartitioningCollection of both sides instead; an earlier plan whose
+      // checkpoints accumulated such expressions made the localCheckpoint
+      // call itself grow without bound (measured: 0.2s -> 88s/iteration by
+      // iteration 25).
+      val step = PreparedStep(ranks,
+        ranks
+          .join(contribs.hint(joinHint), Seq("vid"), "left")
+          .select(
+            col("vid"),
+            (PreparedStep.scalar + lit(damping) * coalesce(col("contrib"), lit(0.0))).as("rank"),
+            col("dangling"),
+            col("rank").as("prev")),
+        Seq(max(abs(col("rank") - col("prev"))), sum(when(col("dangling"), col("rank")).otherwise(0.0))),
+        drop = Seq("prev"))
+
       var danglingMass = startMass
       var delta = Double.MaxValue
       var iter = startIter
@@ -258,39 +311,9 @@ object PageRank {
       val loopT0 = System.nanoTime()
       val iterTimes = scala.collection.mutable.ArrayBuffer[Double]()
 
-      val joinHint = "shuffle_hash"
       while (delta >= tol && iter < maxIter) {
         val iterT0 = System.nanoTime()
-        // Gather-scatter: fan rank/odeg out over the CSR rows (map-side explode,
-        // never inside the join), partial-agg, one exchange on vid, final agg.
-        // Build side = narrow ranks rows; the array-bearing adj side streams.
-        val contribs = ranks.as("r").hint(joinHint)
-          .join(adj.as("l"), col("r.vid") === col("l.src"))
-          .select((col("r.rank") / col("l.odeg")).as("w"), explode(col("l.nbrs")).as("vid"))
-          .groupBy(col("vid"))
-          .agg(sum(col("w")).as("contrib"))
-        val base = teleport + damping * danglingMass / n
-        // The eager localCheckpoint (truncating lineage — see
-        // LineageTruncateEvery's Scaladoc for the measured rationale)
-        // materializes the new vector, and the same job observes the L-inf
-        // delta and the next dangling mass. The previous vector is the LEFT
-        // side of a left-outer join, whose output partitioning is the left
-        // side's HashPartitioning(vid) alone, so every checkpoint's LogicalRDD
-        // carries the same one-expression partitioning. An inner join would
-        // report a PartitioningCollection of both sides instead; an earlier
-        // plan whose checkpoints accumulated such expressions made the
-        // localCheckpoint call itself grow without bound (measured: 0.2s ->
-        // 88s/iteration by iteration 25).
-        val (next, stats) = GraphOps.checkpointObserved(
-          ranks
-            .join(contribs.hint(joinHint), Seq("vid"), "left")
-            .select(
-              col("vid"),
-              (lit(base) + lit(damping) * coalesce(col("contrib"), lit(0.0))).as("rank"),
-              col("dangling"),
-              col("rank").as("prev")),
-          Seq(max(abs(col("rank") - col("prev"))), sum(when(col("dangling"), col("rank")).otherwise(0.0))),
-          drop = Seq("prev"))
+        val (next, stats) = step.run(ranks, teleport + damping * danglingMass / n)
         toRelease += ranks
         ranks = next
         delta = stats.getDouble(0)

@@ -65,9 +65,14 @@ object GraphOps {
     withObservation(df, metrics)(_.drop(drop: _*).localCheckpoint(true))
 
   /** Both directed half-edges per undirected edge (reference `loading.c:418-425`). */
-  def symmetrize(edges: DataFrame): DataFrame = {
+  def symmetrize(edges: DataFrame): DataFrame = bothDirections(edges).distinct()
+
+  /** [[symmetrize]] without the dedupe, for callers that repartition before
+    * deduping (a hash partitioning on either column satisfies the distinct,
+    * so the two share one exchange). */
+  private[graft] def bothDirections(edges: DataFrame): DataFrame = {
     val e = endpoints(edges)
-    e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct()
+    e.union(e.select(col("dst").as("src"), col("src").as("dst")))
   }
 
   /** Distinct vertex ids appearing as either endpoint. */

@@ -1,7 +1,9 @@
 package graft.algo
 
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkTestBase
+import graft.{ActionLog, SparkTestBase}
 import graft.fixtures.{Generators, ReferenceOracles}
 
 class LabelPropagationSpec extends AnyFunSuite with SparkTestBase {
@@ -78,5 +80,34 @@ class LabelPropagationSpec extends AnyFunSuite with SparkTestBase {
       val want = ReferenceOracles.lpMajority(e, rounds)
       assert(got == want, s"rounds=$rounds: $got vs $want")
     }
+  }
+
+  test("set-up shuffles once: every mode persists its symmetric edges with one exchange") {
+    val e = Generators.barabasiAlbert(40, 2, seed = 5L)
+    val df = Generators.edgesDF(spark, e)
+    val vids = (e.map(_._1) ++ e.map(_._2)).distinct
+    val init = spark.createDataFrame(vids.map(v => (v, "a"))).toDF("vid", "label")
+    val modes = Seq[(String, () => Any)](
+      "wlRefine" -> (() => LabelPropagation.wlRefine(spark, df, init, 1).collect()),
+      "wlRefineHashed" -> (() => LabelPropagation.wlRefineHashed(spark, df, init, 1).collect()),
+      // a single majority round persists nothing
+      "majority" -> (() => LabelPropagation.majority(spark, df, 2).collect()))
+    // counted without AQE, whose plans hide their exchanges until they run
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try for ((mode, call) <- modes) {
+      val persisted = ActionLog.during(spark) { log =>
+        call()
+        log.entries.flatMap(_._2.executedPlan.collect {
+          case s: InMemoryTableScanExec if s.relation.output.map(_.name) == Seq("src", "dst") =>
+            s.relation.cachedPlan
+        })
+      }
+      assert(persisted.nonEmpty, s"$mode read no persisted edge frame")
+      for (plan <- persisted) {
+        val exchanges = plan.collect { case x: ShuffleExchangeExec => x }
+        assert(exchanges.size == 1, s"$mode: $exchanges")
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 }

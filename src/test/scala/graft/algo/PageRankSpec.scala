@@ -1,5 +1,9 @@
 package graft.algo
 
+import org.apache.spark.SparkException
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.funsuite.AnyFunSuite
@@ -203,5 +207,65 @@ class PageRankSpec extends AnyFunSuite with SparkTestBase {
       PageRank.run(spark, df, tol = 0.0, maxIter = 6, checkpoint = Some(graft.run.IterationCheckpoint(dir.toString, 2))))
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"persisted RDDs left behind: $leaked")
+  }
+
+  test("a job cancelled in a re-bound iteration fails the run and leaks no cache") {
+    val df = Generators.edgesDF(spark, Generators.barabasiAlbert(40, 2, seed = 37L))
+    val sc = spark.sparkContext
+    // from iteration 3 on, every job is cancelled as it starts (a job that
+    // finishes before its cancel lands only moves the failure one iteration on)
+    @volatile var cancelling = false
+    val canceller = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = if (cancelling) sc.cancelJob(e.jobId)
+    }
+    val before = sc.getPersistentRDDs.keySet
+    sc.addSparkListener(canceller)
+    try intercept[SparkException](PageRank.run(spark, df, tol = 0.0, maxIter = 6,
+      onIterationEnd = it => if (it == 2) cancelling = true))
+    finally {
+      cancelling = false
+      sc.removeSparkListener(canceller)
+    }
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"persisted RDDs left behind: $leaked")
+  }
+
+  test("steady-state iterations neither plan nor compile") {
+    val e = Generators.barabasiAlbert(60, 2, seed = 43L)
+    // dangling vertices make the redistributed mass, and with it the step's
+    // scalar, change every iteration
+    assert((e.flatMap { case (a, b) => Seq(a, b) }.toSet -- e.map(_._1)).nonEmpty)
+    val df = Generators.edgesDF(spark, e)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val (got, compiled, steady) = ActionLog.during(spark) { log =>
+      var c3, c8 = 0L
+      var a3, a8 = 0
+      val r = PageRank.run(spark, df, tol = 0.0, maxIter = 8, onIterationEnd = {
+        case 3 => c3 = compiles.getCount; a3 = log.entries.size
+        case 8 => c8 = compiles.getCount; a8 = log.entries.size
+        case _ => ()
+      })
+      val ranks = r.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      GraphOps.releaseCheckpoint(r.ranks)
+      (ranks, c8 - c3, log.entries.slice(a3, a8))
+    }
+    assert(compiled == 0, s"$compiled classes compiled in iterations 4-8")
+    assert(steady.map(_._1) == Seq.fill(5)("localCheckpoint"))
+    for ((_, qe) <- steady)
+      assert(!qe.tracker.phases.contains(QueryPlanningTracker.OPTIMIZATION), qe.tracker.phases.keySet)
+    assertAllClose(got, ReferenceOracles.pageRankScalarFixed(e, 8), 1e-12)
+  }
+
+  test("a partition count other than the session's shuffle partitions iterates on it") {
+    val e = Generators.barabasiAlbert(30, 2, seed = 3L)
+    val df = Generators.edgesDF(spark, e)
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    for (k <- Seq(shufflePartitions / 2, shufflePartitions * 2)) {
+      val r = PageRank.run(spark, df, tol = 0.0, maxIter = 5, numPartitions = Some(k))
+      assert(r.ranks.rdd.getNumPartitions == k)
+      val got = r.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      GraphOps.releaseCheckpoint(r.ranks)
+      assertAllClose(got, ReferenceOracles.pageRankScalarFixed(e, 5), 1e-12)
+    }
   }
 }
