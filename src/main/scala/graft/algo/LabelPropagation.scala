@@ -42,8 +42,13 @@ object LabelPropagation {
     * with the exact signature string `ownLabel:nbr1,nbr2,...` (sorted),
     * mirroring reference `getWLLabel` (`weisfeilerLehman.c:19-56`, qsort at
     * `:33`). SQL-oracle-friendly (no engine-specific hash). */
-  def wlSignatures(spark: SparkSession, edges: DataFrame, labels: DataFrame): DataFrame = {
-    val sym = GraphOps.symmetrize(edges)
+  def wlSignatures(spark: SparkSession, edges: DataFrame, labels: DataFrame): DataFrame =
+    signaturesOver(GraphOps.symmetrize(edges), labels)
+
+  /** [[wlSignatures]] over `sym`, which already holds both half-edges of
+    * every edge once (symmetrizing it again would cost a distinct's
+    * exchange per call). */
+  private def signaturesOver(sym: DataFrame, labels: DataFrame): DataFrame = {
     val l = labels.select(col(labels.columns(0)).cast("long").as("vid"), col(labels.columns(1)).cast("string").as("label"))
     val nbrLabels = sym
       .join(l.withColumnRenamed("vid", "dst"), "dst")
@@ -56,30 +61,10 @@ object LabelPropagation {
   /** k WL rounds with hashed label compression; returns (vid, label LONG).
     * Matches the reference's refinement as a partition of the vertex set
     * (ids differ from the trie's insertion-order ids by a bijection). */
-  def wlRefine(spark: SparkSession, edges: DataFrame, initialLabels: DataFrame, rounds: Int): DataFrame = {
-    val p = GraphOps.defaultParallelism(spark)
-    val sym = symmetricEdges(edges, p).persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = initialLabels
-      .select(col(initialLabels.columns(0)).cast("long").as("vid"),
-        xxhash64(col(initialLabels.columns(1)).cast("string")).as("label"))
-      .repartition(p, col("vid"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    labels.count()
-    var i = 0
-    while (i < rounds) {
-      val next = wlSignatures(spark, sym, labels)
-        .select(col("vid"), xxhash64(col("signature")).as("label"))
-        .repartition(p, col("vid"))
-        .localCheckpoint(true) // truncate per-round lineage (see PageRank)
-      // superseded round's CHECKPOINT blocks too (plain unpersist is a no-op
-      // on a localCheckpoint'd frame — see GraphOps.releaseCheckpoint)
-      GraphOps.releaseCheckpoint(labels)
-      labels = next
-      i += 1
+  def wlRefine(spark: SparkSession, edges: DataFrame, initialLabels: DataFrame, rounds: Int): DataFrame =
+    wlRounds(spark, edges, initialLabels, rounds) { (sym, labels) =>
+      signaturesOver(sym, labels).select(col("vid"), xxhash64(col("signature")).as("label"))
     }
-    sym.unpersist(false)
-    labels
-  }
 
   /** k WL rounds with COMMUTATIVE hash combination — the web-scale variant:
     * a hub's refinement state is a constant-size (sum, bit_xor, count) fold
@@ -92,7 +77,28 @@ object LabelPropagation {
     * collisions), merging WL classes that [[wlRefine]] keeps distinct —
     * callers needing exact refinement must use [[wlRefine]]. Tests compare
     * partitions on fixtures. */
-  def wlRefineHashed(spark: SparkSession, edges: DataFrame, initialLabels: DataFrame, rounds: Int): DataFrame = {
+  def wlRefineHashed(spark: SparkSession, edges: DataFrame, initialLabels: DataFrame, rounds: Int): DataFrame =
+    wlRounds(spark, edges, initialLabels, rounds) { (sym, labels) =>
+      val folded = sym
+        .join(labels.withColumnRenamed("vid", "dst"), "dst")
+        .select(col("src").as("vid"), xxhash64(col("label")).as("h"))
+        // sum folds hashes reduced to 32 bits so the ANSI-checked long sum
+        // cannot overflow below 2^31 neighbors (far above any real degree)
+        .groupBy("vid")
+        .agg(sum(pmod(col("h"), lit(1L << 32))).as("hsum"),
+          expr("bit_xor(h)").as("hxor"), count(lit(1)).as("hcnt"))
+      labels
+        .join(folded, Seq("vid"), "left")
+        .select(col("vid"), xxhash64(col("label"),
+          coalesce(col("hsum"), lit(0L)), coalesce(col("hxor"), lit(0L)),
+          coalesce(col("hcnt"), lit(0L))).as("label"))
+    }
+
+  /** The WL round loop of [[wlRefine]] and [[wlRefineHashed]]: hashed start
+    * labels over the cached symmetric edges, then `rounds` times
+    * `step(sym, labels)`, each round's (vid, label) checkpointed. */
+  private def wlRounds(spark: SparkSession, edges: DataFrame, initialLabels: DataFrame, rounds: Int)(
+      step: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val p = GraphOps.defaultParallelism(spark)
     val sym = symmetricEdges(edges, p).persist(StorageLevel.MEMORY_AND_DISK)
     var labels = initialLabels
@@ -103,22 +109,14 @@ object LabelPropagation {
     labels.count()
     var i = 0
     while (i < rounds) {
-      val folded = sym
-        .join(labels.withColumnRenamed("vid", "dst"), "dst")
-        .select(col("src").as("vid"), xxhash64(col("label")).as("h"))
-        // sum folds hashes reduced to 32 bits so the ANSI-checked long sum
-        // cannot overflow below 2^31 neighbors (far above any real degree)
-        .groupBy("vid")
-        .agg(sum(pmod(col("h"), lit(1L << 32))).as("hsum"),
-          expr("bit_xor(h)").as("hxor"), count(lit(1)).as("hcnt"))
-      val next = labels
-        .join(folded, Seq("vid"), "left")
-        .select(col("vid"), xxhash64(col("label"),
-          coalesce(col("hsum"), lit(0L)), coalesce(col("hxor"), lit(0L)),
-          coalesce(col("hcnt"), lit(0L))).as("label"))
+      val next = step(sym, labels)
         .repartition(p, col("vid"))
-        .localCheckpoint(true)
-      GraphOps.releaseCheckpoint(labels) // checkpoint blocks, not just cache
+        .localCheckpoint(true) // truncate per-round lineage (see PageRank)
+      // superseded round's CHECKPOINT blocks too (plain unpersist is a no-op
+      // on a localCheckpoint'd frame — see GraphOps.releaseCheckpoint); the
+      // start labels are a plain persist over the caller's frame, whose own
+      // checkpoint, if any, releaseCheckpoint would free with them
+      if (i == 0) labels.unpersist(false) else GraphOps.releaseCheckpoint(labels)
       labels = next
       i += 1
     }
@@ -166,7 +164,8 @@ object LabelPropagation {
         .select(col("vid"), coalesce(col("newLabel"), col("label")).as("label"))
         .repartition(p, col("vid"))
         .localCheckpoint(true) // truncate per-round lineage (see PageRank)
-      GraphOps.releaseCheckpoint(labels) // checkpoint blocks, not just cache
+      // checkpoint blocks, not just cache; the start labels as in [[wlRounds]]
+      if (i == 0) labels.unpersist(false) else GraphOps.releaseCheckpoint(labels)
       labels = next
       i += 1
     }

@@ -61,9 +61,6 @@ case object XxHashing extends DedupHashing {
   * scale — same shape, no hex-string materialization. */
 object Dedup {
 
-  /** Pluggable token hash: portable md5 string (oracle mode). */
-  def hashExpr(c: Column, salt: Int): Column = Md5Hashing.tokenHash(c, salt)
-
   /** Spread a compute-heavy scan across the session's parallelism when the
     * source yields fewer splits than cores (guide §2.5 input skew: a single
     * small parquet file is ONE scan partition, so the tokenize + per-token

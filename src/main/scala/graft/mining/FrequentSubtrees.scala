@@ -1,5 +1,6 @@
 package graft.mining
 
+import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -17,7 +18,7 @@ import graft.graph.GraphOps
   *     edge triple, attached at every compatible vertex (the reference's
   *     outer-shell extension, simplified to all-shell: a superset, pruned by
   *     the same dedupe + apriori + support steps);
-  *  2. dedupe by free-tree canonical string (reference
+  *  2. dedupe by canonical string (reference
   *     `lwm_miningAndExtension.c:101-113` searchTree dedupe);
   *  3. apriori prune — every leaf-deleted (k−1)-subtree must be frequent
   *     (left semi shape: explode subtree keys, join against the previous
@@ -28,19 +29,25 @@ import graft.graph.GraphOps
   *     [[SubtreeIso]] embedding kernel, then `groupBy(key).count >= t`
   *     (reference `:191-221`).
   *
+  * The free-tree miner [[mine]] and the rooted miner [[mineRooted]] (the
+  * reference's `lwm_*` and `lwmr_*` copies) run this as ONE level loop,
+  * [[levelwise]]. A private `LevelSpec` holds the five things they differ
+  * in: the canonical string (free-tree vs rooted), the extension alphabet
+  * (both orientations of every frequent edge triple vs the directed
+  * parent -> child triples), the leaves the apriori step deletes (any leaf
+  * vs any non-root leaf), the per-graph embedding test (the `lwg -e`
+  * operator vs the rooted embedding) and the per-graph preparation with
+  * its precondition (a forest DB for the per-component operators, a
+  * rooted-forest DB for the rooted miner).
+  *
   * All per-(pattern, graph) work runs inside executors; the driver only
   * steers the level loop (same shape as the PageRank iteration driver).
-  * Patterns are trees; the DB must be a forest DB (the reference's
-  * `initFrequentTreeMiningForForestDB` precondition).
   */
 object FrequentSubtrees {
 
-  /** Hygiene counters for [[mineDfs]]'s per-expansion broadcasts (round-4
-    * verdict: `bc`/`bset` were created per expansion and never destroyed,
-    * accumulating driver+executor memory across a deep walk). Test-visible
-    * so the create==destroy invariant is asserted directly rather than by
-    * counting block-manager blocks, which Spark's own broadcast joins churn
-    * asynchronously. */
+  /** Counters of [[mineDfs]]'s per-expansion broadcasts, so a spec asserts
+    * create == destroy directly (block-manager block counts churn with
+    * Spark's own broadcast joins). */
   private[graft] val dfsBroadcastsCreated = new java.util.concurrent.atomic.AtomicLong
   private[graft] val dfsBroadcastsDestroyed = new java.util.concurrent.atomic.AtomicLong
 
@@ -101,22 +108,19 @@ object FrequentSubtrees {
   final case class Pattern(vlabels: Seq[String], edges: Seq[(Int, Int, String)], key: String, parentKey: String)
 
   final case class SupportPair(key: String, graphId: Long)
-  final case class LevelResult(size: Int, cstring: String, support: Long)
 
   private def toLTree(vlabels: Seq[String], edges: Seq[(Int, Int, String)]): SubtreeIso.LTree =
     SubtreeIso.LTree(vlabels.toArray, edges.toArray)
 
+  private def freeCanonical(vl: Seq[String], es: Seq[(Int, Int, String)]): String =
+    SubtreeIso.canonicalString(toLTree(vl, es))
+
   /** Per-transaction context for a batch of embedding checks: the re-indexed
     * LTree (and the ps forests' LTrees) are built ONCE per graph and reused
-    * across every candidate checked against it — the support-counting step
-    * hands each graph all its candidate patterns at once (round-6: the
-    * former per-(pattern, graph) `joinWith` deserialized and re-indexed the
-    * transaction once per pair). Round-6.2: the DFS miner caches an RDD of
-    * (graphId, GraphCtx) objects ([[keyedGraphCtx]]) so the lazy indexes
-    * additionally survive across its many expansions; Serializable so a
-    * MEMORY_AND_DISK spill can write it. The indexes are `@transient`: they
-    * are derived from `g`, so a spill writes only the graph and a read-back
-    * copy rebuilds them on first use. */
+    * across every candidate checked against it (the support step hands each
+    * graph all its candidates at once; the DFS miner caches these objects,
+    * [[keyedGraphCtx]]). The indexes are `@transient`: a MEMORY_AND_DISK
+    * spill writes only the graph and a read-back copy rebuilds them. */
   private[mining] final class GraphCtx(val g: TGraph) extends Serializable {
     @transient lazy val gt: SubtreeIso.LTree = toLTree(g.vlabels, g.edges)
     @transient lazy val psLts: Seq[SubtreeIso.LTree] =
@@ -153,38 +157,62 @@ object FrequentSubtrees {
     }
   }
 
-  private def embedsWith(operator: EmbeddingOp,
-      vl: Seq[String], es: Seq[(Int, Int, String)], g: TGraph): Boolean =
-    embedsCtx(operator, vl, es, new GraphCtx(g))
-
-  /** All one-leaf extensions of a free-tree pattern over the frequent-edge
-    * alphabet (reference `treeEnumeration.c:157` extension step — every
-    * vertex, every compatible triple; a superset of the outer-shell
-    * extension, pruned downstream by dedupe/apriori/support). */
-  private def extensionsOf(pat: Pattern, exts: Seq[(String, String, String)]): Seq[Pattern] = {
+  /** All one-leaf extensions of a pattern over the frequent-triple alphabet
+    * (reference `treeEnumeration.c:157` extension step — every vertex, every
+    * compatible triple; a superset of the outer-shell extension, pruned
+    * downstream by dedupe/apriori/support): a vertex labelled like a
+    * triple's first label gets a new leaf labelled like its last. The free
+    * alphabet holds both orientations of every triple ([[bothWays]]), so an
+    * `a-b` triple grows a `b` leaf on an `a` vertex and an `a` leaf on a `b`
+    * vertex, and an `a-a` triple an `a` leaf on an `a` vertex. */
+  private def extensionsOf(pat: Pattern, exts: Seq[(String, String, String)],
+      canonical: (Seq[String], Seq[(Int, Int, String)]) => String): Seq[Pattern] = {
     val n = pat.vlabels.size
     for {
       u <- 0 until n
-      (la, el, lb) <- exts
-      leafLabel <- (if (pat.vlabels(u) == la && pat.vlabels(u) == lb) Seq(lb)
-                    else if (pat.vlabels(u) == la) Seq(lb)
-                    else if (pat.vlabels(u) == lb) Seq(la)
-                    else Seq.empty[String])
+      (from, el, to) <- exts
+      if pat.vlabels(u) == from
     } yield {
-      val vl = pat.vlabels :+ leafLabel
+      val vl = pat.vlabels :+ to
       val es = pat.edges :+ ((u, n, el))
-      Pattern(vl, es, SubtreeIso.canonicalString(toLTree(vl, es)), pat.key)
+      Pattern(vl, es, canonical(vl, es), pat.key)
     }
   }
 
-  /** Transaction graphs re-indexed to dense vertex ids, with the
-    * forest-precondition checks and (for the sample-once operators) the
-    * once-per-transaction sampled structures. NOT persisted — callers key it
-    * by graphId into the partitioned GraphCtx cache ([[keyedGraphCtx]]). */
-  private def transactionGraphs(spark: SparkSession, v: DataFrame, e: DataFrame,
-      operator: EmbeddingOp): Dataset[TGraph] = {
+  /** An undirected edge's two extension triples. */
+  private def bothWays(a: String, el: String, b: String): Seq[(String, String, String)] =
+    Seq((a, el, b), (b, el, a))
+
+  /** A graph's free-tree extension triples: each edge both ways round. */
+  private def orientedTriples(g: TGraph): Iterator[(String, String, String)] =
+    g.edges.iterator.flatMap { case (a, b, l) => bothWays(g.vlabels(a), l, g.vlabels(b)) }
+
+  /** The extension alphabet: the label triples in `threshold` or more
+    * graphs, from one row per (graph, triple). Collected — it is tiny by
+    * construction (|vertex labels|² × |edge labels| at most; the reference
+    * holds exactly this in memory), unlike the per-level patterns, which
+    * stay distributed. */
+  private def frequentTriples(perGraph: DataFrame, threshold: Long): Seq[(String, String, String)] =
+    perGraph.groupBy(perGraph.columns.map(col).toSeq: _*).agg(count(lit(1)).as("support"))
+      .where(col("support") >= threshold)
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
+
+  /** The DB under the miners' column names and types, by position:
+    * (graph_id, vid, vlabel) and (graph_id, src, dst, elabel). */
+  private def normalized(verts: DataFrame, edges: DataFrame): (DataFrame, DataFrame) = (
+    verts.select(col(verts.columns(0)).cast("long").as("graph_id"),
+      col(verts.columns(1)).cast("long").as("vid"), col(verts.columns(2)).cast("string").as("vlabel")),
+    edges.select(col(edges.columns(0)).cast("long").as("graph_id"),
+      col(edges.columns(1)).cast("long").as("src"), col(edges.columns(2)).cast("long").as("dst"),
+      col(edges.columns(3)).cast("string").as("elabel")))
+
+  /** Transaction graphs re-indexed to dense vertex ids, each passed through
+    * `prepare` (its precondition check and once-per-transaction
+    * structures). NOT persisted — the caller decides. */
+  private def transactionGraphs(spark: SparkSession, verts: DataFrame, edges: DataFrame,
+      prepare: TGraph => TGraph): Dataset[TGraph] = {
     import spark.implicits._
-    val requireForest = preparation(operator)._1
+    val (v, e) = normalized(verts, edges)
     v.groupBy("graph_id")
       .agg(collect_list(struct(col("vid"), col("vlabel"))).as("vs"))
       .join(e.groupBy("graph_id")
@@ -193,48 +221,69 @@ object FrequentSubtrees {
       .map { case (gid, vs, es) =>
         val sorted = vs.sortBy(_._1)
         val idx = sorted.map(_._1).zipWithIndex.toMap
-        val g = TGraph(gid, sorted.map(_._2),
-          es.getOrElse(Nil).map { case (s, d, l) => (idx(s), idx(d), l) })
-        // Forest-DB precondition — EXACT subtree operator only (the
-        // reference's initFrequentTreeMiningForForestDB contract): the
-        // subtree-iso kernel only excludes the entering neighbor, so on a
-        // cyclic transaction it would silently degrade to a non-injective
-        // walk and overcount support. Fail loudly instead (acyclic <=>
-        // m = n - #components, via union-find). The local-easy and HOPS
-        // operators exist precisely FOR cyclic DBs — no check there.
-        if (requireForest) {
-          val parent = scala.collection.mutable.Map[Int, Int]()
-          def find(x: Int): Int = { var r = x; while (parent.getOrElse(r, r) != r) r = parent(r); r }
-          var merged = 0
-          for ((a, b, _) <- g.edges) {
-            val (ra, rb) = (find(a), find(b))
-            if (ra != rb) { parent(ra) = rb; merged += 1 }
-          }
-          require(merged == g.edges.size,
-            s"FrequentSubtrees.mine: transaction graph $gid is cyclic; the levelwise " +
-              "tree miner with the exact subtree operator requires a forest DB " +
-              "(reference lwm_initAndCollect.c precondition) — use LocalEasyExact/" +
-              "LocalEasySampled/Hops for cyclic DBs")
-        }
-        // sample-once operators: draw the sampled structures HERE, once per
-        // transaction, and carry them with the graph through every level
-        // (the reference's sampled-DB construction in lwm_initAndCollect.c)
-        operator match {
-          case PsSampledOnce(k, seed) =>
-            val lt = toLTree(g.vlabels, g.edges)
-            g.copy(psForests = (0 until k).map { i =>
-              graft.trees.LocalEasy.wholeGraphSpanningForest(lt, seed ^ gid * 1000003L + i)
-                .edges.toSeq
-            })
-          case BpsSampledOnce(k, seed) =>
-            g.copy(bpsLocal =
-              graft.trees.LocalEasy.bpsLocalTrees(toLTree(g.vlabels, g.edges), k, seed ^ gid))
-          case _ => g
-        }
+        prepare(TGraph(gid, sorted.map(_._2),
+          es.getOrElse(Nil).map { case (s, d, l) => (idx(s), idx(d), l) }))
       }
   }
 
-  /** What [[transactionGraphs]] derives from the operator: whether it
+  /** Fails unless `g` is acyclic as an undirected graph
+    * (m = n - #components, via union-find). */
+  private def requireAcyclic(g: TGraph, miner: String, need: String): Unit = {
+    val parent = scala.collection.mutable.Map[Int, Int]()
+    def find(x: Int): Int = { var r = x; while (parent.getOrElse(r, r) != r) r = parent(r); r }
+    var merged = 0
+    for ((a, b, _) <- g.edges) {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { parent(ra) = rb; merged += 1 }
+    }
+    require(merged == g.edges.size,
+      s"FrequentSubtrees.$miner: transaction graph ${g.graphId} is cyclic; $need")
+  }
+
+  /** Fails if a vertex of `g` is the target of two edges. */
+  private def requireInDegreeAtMostOne(g: TGraph): Unit = {
+    val indeg = Array.fill(g.vlabels.size)(0)
+    for ((_, d, _) <- g.edges) {
+      indeg(d) += 1
+      require(indeg(d) <= 1,
+        s"FrequentSubtrees.mineRooted: transaction graph ${g.graphId} has a vertex with " +
+          "in-degree > 1; the rooted miner requires a rooted-forest DB")
+    }
+  }
+
+  /** The free-tree miners' per-graph preparation under `operator`. */
+  private def freePreparation(operator: EmbeddingOp): TGraph => TGraph = {
+    val requireForest = preparation(operator)._1
+    g => {
+      // Forest-DB precondition — per-component subtree operators only (the
+      // reference's initFrequentTreeMiningForForestDB contract): the
+      // subtree-iso kernel only excludes the entering neighbor, so on a
+      // cyclic transaction it would silently degrade to a non-injective
+      // walk and overcount support. Fail loudly instead. The local-easy and
+      // HOPS operators exist precisely FOR cyclic DBs — no check there.
+      if (requireForest)
+        requireAcyclic(g, "mine", "the levelwise tree miner with the exact subtree operator " +
+          "requires a forest DB (reference lwm_initAndCollect.c precondition) — use " +
+          "LocalEasyExact/LocalEasySampled/Hops for cyclic DBs")
+      // sample-once operators: draw the sampled structures HERE, once per
+      // transaction, and carry them with the graph through every level
+      // (the reference's sampled-DB construction in lwm_initAndCollect.c)
+      operator match {
+        case PsSampledOnce(k, seed) =>
+          val lt = toLTree(g.vlabels, g.edges)
+          g.copy(psForests = (0 until k).map { i =>
+            graft.trees.LocalEasy.wholeGraphSpanningForest(lt, seed ^ g.graphId * 1000003L + i)
+              .edges.toSeq
+          })
+        case BpsSampledOnce(k, seed) =>
+          g.copy(bpsLocal =
+            graft.trees.LocalEasy.bpsLocalTrees(toLTree(g.vlabels, g.edges), k, seed ^ g.graphId))
+        case _ => g
+      }
+    }
+  }
+
+  /** What [[freePreparation]] derives from the operator: whether it
     * rejects cyclic transactions (the per-component isSubtree operators),
     * and whose once-per-transaction samples it stores, if any. Mines whose
     * operators agree on it can share prepared graphs. */
@@ -258,6 +307,46 @@ object FrequentSubtrees {
       .partitionBy(new org.apache.spark.HashPartitioner(p))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
+  /** What the free-tree and the rooted level loop differ in (see the
+    * object's Scaladoc). `triples` gives a graph's (vertex label, edge
+    * label, new-leaf label) triples; the apriori step deletes the leaves
+    * from vertex `firstLeaf` on; `embedder` builds one graph's test for all
+    * of a level's candidates. */
+  private final case class LevelSpec(
+      prepare: TGraph => TGraph,
+      triples: TGraph => Iterator[(String, String, String)],
+      canonical: (Seq[String], Seq[(Int, Int, String)]) => String,
+      firstLeaf: Int,
+      embedder: TGraph => (Seq[String], Seq[(Int, Int, String)]) => Boolean)
+
+  private def freeSpec(operator: EmbeddingOp): LevelSpec = LevelSpec(
+    prepare = freePreparation(operator),
+    triples = orientedTriples,
+    canonical = freeCanonical,
+    firstLeaf = 0,
+    embedder = { g =>
+      val ctx = new GraphCtx(g)
+      (vl, es) => embedsCtx(operator, vl, es, ctx)
+    })
+
+  private val rootedSpec: LevelSpec = LevelSpec(
+    // embedsRooted's global-injectivity argument needs a rooted forest:
+    // acyclic AND in-degree <= 1 — a shared child (in-degree 2) is acyclic
+    // as an undirected graph but still lets sibling-injective matching
+    // reuse a graph vertex. Fail loudly instead of silently overcounting.
+    prepare = { g =>
+      requireInDegreeAtMostOne(g)
+      requireAcyclic(g, "mineRooted", "the rooted miner requires a rooted-forest DB")
+      g
+    },
+    triples = g => g.edges.iterator.map { case (a, b, l) => (g.vlabels(a), l, g.vlabels(b)) },
+    canonical = rootedCanonicalString,
+    firstLeaf = 1,
+    embedder = { g =>
+      val gadj = g.edges.groupBy(_._1)
+      (vl, es) => embedsRootedAdj(vl, es, g, gadj)
+    })
+
   /** Transaction graphs from [[prepareGraphs]] together with the operator
     * they were prepared under. */
   final case class PreparedGraphs(graphs: Dataset[TGraph], operator: EmbeddingOp)
@@ -270,14 +359,8 @@ object FrequentSubtrees {
     * operator needs the same per-transaction preparation (forest check and
     * sample-once structures) — [[mine]] requires it. */
   def prepareGraphs(spark: SparkSession, verts: DataFrame, edges: DataFrame,
-      operator: EmbeddingOp): PreparedGraphs = {
-    val v = verts.select(col(verts.columns(0)).cast("long").as("graph_id"),
-      col(verts.columns(1)).cast("long").as("vid"), col(verts.columns(2)).cast("string").as("vlabel"))
-    val e = edges.select(col(edges.columns(0)).cast("long").as("graph_id"),
-      col(edges.columns(1)).cast("long").as("src"), col(edges.columns(2)).cast("long").as("dst"),
-      col(edges.columns(3)).cast("string").as("elabel"))
-    PreparedGraphs(transactionGraphs(spark, v, e, operator), operator)
-  }
+      operator: EmbeddingOp): PreparedGraphs =
+    PreparedGraphs(transactionGraphs(spark, verts, edges, freePreparation(operator)), operator)
 
   /** Mine frequent subtrees of sizes 1..maxPatternSize with support >=
     * threshold. verts: (graph_id, vid, vlabel); edges: (graph_id, src, dst,
@@ -286,184 +369,144 @@ object FrequentSubtrees {
       threshold: Long, maxPatternSize: Int,
       operator: EmbeddingOp = ExactSubtree,
       sharedGraphs: Option[PreparedGraphs] = None): DataFrame = {
-    import spark.implicits._
     sharedGraphs.foreach { pg =>
       require(preparation(pg.operator) == preparation(operator),
         s"FrequentSubtrees.mine: graphs prepared under ${pg.operator} cannot be mined " +
           s"under $operator (different forest check or sample-once structures)")
     }
-    // v/e each feed exactly ONE consumer since round-6.2 (transactionGraphs;
-    // the level-1 occurrence and the alphabet read the graph cache), so they
-    // are no longer persisted: the single combined plan lets the planner
-    // reuse the caller's shared DB-pipeline exchange across the two groupBy
-    // branches, where two separate cache builds re-ran it once each.
-    val v = verts.select(col(verts.columns(0)).cast("long").as("graph_id"),
-      col(verts.columns(1)).cast("long").as("vid"), col(verts.columns(2)).cast("string").as("vlabel"))
-    val e = edges.select(col(edges.columns(0)).cast("long").as("graph_id"),
-      col(edges.columns(1)).cast("long").as("src"), col(edges.columns(2)).cast("long").as("dst"),
-      col(edges.columns(3)).cast("string").as("elabel"))
+    levelwise(spark, freeSpec(operator), verts, edges, sharedGraphs.map(_.graphs), threshold, maxPatternSize)
+  }
 
-    // ---- transaction graphs, re-indexed once (small per graph) ----
-    // Kept as a TUNGSTEN-cached Dataset deliberately: a round-6.2 experiment
-    // cached (graphId, GraphCtx) objects behind a partitionBy so the level
-    // loop's cogroup would stop re-shuffling the transactions — measured
-    // SLOWER (absimp 6.3 -> 12.4 s, task-CPU 80 -> 307 s): the one-time
-    // partitionBy java-serializes the Seq-heavy graph objects, which costs
-    // more than the per-level re-shuffle of compact tungsten rows it saves
-    // at 2-3 levels. Reverted; the DFS miner (many passes per run) keeps
-    // the object cache — see [[keyedGraphCtx]]/[[mineDfs]].
-    val ownGraphs = sharedGraphs.isEmpty
-    val graphs: Dataset[TGraph] = sharedGraphs.map(_.graphs).getOrElse(
-      transactionGraphs(spark, v, e, operator).persist(StorageLevel.MEMORY_AND_DISK))
+  /** The apriori level loop of [[mine]] and [[mineRooted]], steered by
+    * `spec`. `shared` graphs stay the caller's; everything else this
+    * persists or checkpoints, except the returned result, is released
+    * before it returns or throws. A level is two actions: the frequent
+    * keys' checkpoint, which also observes their count, and one combined
+    * checkpoint of the next level's patterns and support pairs. */
+  private def levelwise(spark: SparkSession, spec: LevelSpec, verts: DataFrame, edges: DataFrame,
+      shared: Option[Dataset[TGraph]], threshold: Long, maxPatternSize: Int): DataFrame = {
+    import spark.implicits._
+    // releasing a frame twice is a no-op, so the loop's own one-level-behind
+    // releases leave these lists as they are
+    val cached = ArrayBuffer[Dataset[_]]()
+    val checkpoints = ArrayBuffer[Dataset[_]]()
+    def cache[T](ds: Dataset[T]): Dataset[T] = { cached += ds; ds.persist(StorageLevel.MEMORY_AND_DISK) }
+    try {
+      // ---- transaction graphs, re-indexed once (small per graph) ----
+      // Tungsten-cached on purpose: the object cache of [[keyedGraphCtx]]
+      // measured slower at 2-3 levels. The DB's v/e frames feed only this
+      // cache, so they are not persisted.
+      val graphs = shared.getOrElse(cache(transactionGraphs(spark, verts, edges, spec.prepare)))
 
-    // ---- level 1: frequent vertex labels (getFrequentVertices) ----
-    // Round-3 change: the per-level pattern dictionary STAYS DISTRIBUTED —
-    // round 2 collected every level's patterns to the driver (mirroring the
-    // reference's in-memory SearchTree), which was the one driver-memory
-    // bottleneck at web scale. Only the frequent-EDGE extension alphabet is
-    // collected + broadcast (tiny by construction: |vertex labels|² × |edge
-    // labels| upper bound, and the reference holds exactly this in memory).
-    // Round-6.2: vertOcc and the edge alphabet both read the cached
-    // `graphs` (labels ride in TGraph) instead of re-joining v/e — the
-    // per-graph distinct runs inside the flatMap, so only already-deduped
-    // (graph, label) / (graph, triple) pairs reach a shuffle, and the two
-    // label joins of the former alphabet derivation disappear outright.
-    val vertOcc = graphs.flatMap(g => g.vlabels.distinct.map(l => (g.graphId, l)))
-      .toDF("graph_id", "vlabel").persist(StorageLevel.MEMORY_AND_DISK)
-    val freq1 = vertOcc.groupBy("vlabel").agg(count(lit(1)).as("support"))
-      .where(col("support") >= threshold)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var results: DataFrame = freq1
-      .select(lit(1).as("size"), col("vlabel").as("cstring"), col("support"))
-    var patternsDS: Dataset[Pattern] = freq1
-      .select("vlabel").as[String]
-      .map(l => Pattern(Seq(l), Nil, l, ""))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var nPatterns = patternsDS.count()
-    var supportDS: Dataset[SupportPair] = vertOcc
-      .join(freq1.select("vlabel"), "vlabel")
-      .select(col("vlabel").as("key"), col("graph_id").as("graphId"))
-      .as[SupportPair].persist(StorageLevel.MEMORY_AND_DISK)
+      // ---- level 1: frequent vertex labels (getFrequentVertices) ----
+      // vertOcc and the alphabet read the cached `graphs`: the per-graph
+      // distinct runs inside the flatMap, so only deduped pairs shuffle.
+      val vertOcc = cache(graphs.flatMap(g => g.vlabels.distinct.map(l => (g.graphId, l)))
+        .toDF("graph_id", "vlabel"))
+      val freq1 = cache(vertOcc.groupBy("vlabel").agg(count(lit(1)).as("support"))
+        .where(col("support") >= threshold))
+      var results: DataFrame = freq1
+        .select(lit(1).as("size"), col("vlabel").as("cstring"), col("support"))
+      var patternsDS: Dataset[Pattern] = cache(freq1.select("vlabel").as[String]
+        .map(l => Pattern(Seq(l), Nil, l, "")))
+      var supportDS: Dataset[SupportPair] = cache(vertOcc
+        .join(freq1.select("vlabel"), "vlabel")
+        .select(col("vlabel").as("key"), col("graph_id").as("graphId"))
+        .as[SupportPair])
+      // ---- frequent edge triples = the extension alphabet (getFrequentEdges) ----
+      val bcEdges = spark.sparkContext.broadcast(
+        frequentTriples(graphs.flatMap(g => spec.triples(g).toSet).toDF(), threshold))
 
-    // ---- frequent edge triples = the extension alphabet (getFrequentEdges) ----
-    // Triple orientation (la <= lb) matters only for dedupe — extensionsOf
-    // treats the triple symmetrically — so the JVM string order here is as
-    // good as the former least/greatest SQL pair.
-    val freqEdges: Seq[(String, String, String)] = graphs
-      .flatMap { g =>
-        g.edges.iterator.map { case (a, b, l) =>
-          val (la, lb) = (g.vlabels(a), g.vlabels(b))
-          if (la <= lb) (la, l, lb) else (lb, l, la)
-        }.toSet.iterator
-      }
-      .toDF("la", "elabel", "lb")
-      .groupBy("la", "elabel", "lb").agg(count(lit(1)).as("support"))
-      .where(col("support") >= threshold)
-      .select("la", "elabel", "lb").as[(String, String, String)].collect().toSeq
-    val bcEdges = spark.sparkContext.broadcast(freqEdges)
-    val levelCaches = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    // The two initial frames are plain persists; from level 2 on each level
-    // replaces them with ONE combined checkpoint (released a level later).
-    var prevLevelFrames: Seq[Dataset[_]] = Seq(patternsDS, supportDS)
+      // both labels of a frequent triple are frequent, so an empty alphabet
+      // is the only way level 1 ends the mine: no level-1 count is needed
+      var more = bcEdges.value.nonEmpty
+      var state: DataFrame = null // the level's combined checkpoint, from level 2 on
+      var level = 2
+      while (level <= maxPatternSize && more) {
+        // 1-2. extend every pattern at every compatible vertex; dedupe by key.
+        val candidates = patternsDS
+          .flatMap(pat => extensionsOf(pat, bcEdges.value, spec.canonical))
+          .dropDuplicates("key")
 
-    var level = 2
-    while (level <= maxPatternSize && nPatterns > 0) {
-      // 1-2. extend every pattern at every compatible vertex; dedupe by key.
-      val candidates = patternsDS
-        .flatMap(pat => extensionsOf(pat, bcEdges.value))
-        .dropDuplicates("key")
-
-      // 3. apriori: every leaf-deleted (k-1)-subtree key must be frequent.
-      val prevKeys = patternsDS.select(col("key").as("subKey"))
-      val subKeys = candidates.flatMap { c =>
-        val lt = toLTree(c.vlabels, c.edges)
-        val deg = Array.fill(lt.n)(0)
-        for ((a, b, _) <- c.edges) { deg(a) += 1; deg(b) += 1 }
-        (0 until lt.n).filter(i => deg(i) <= 1).map { leaf =>
-          val keep = (0 until lt.n).filter(_ != leaf)
-          val remap = keep.zipWithIndex.toMap
-          val vl = keep.map(c.vlabels)
-          val es = c.edges.collect { case (a, b, l) if a != leaf && b != leaf => (remap(a), remap(b), l) }
-          (c.key, SubtreeIso.canonicalString(toLTree(vl, es)))
-        }
-      }.toDF("key", "subKey")
-      // (left-anti right side needs no dedupe — the former .distinct() here
-      // was one aggregate+exchange per level for nothing, round-6.2)
-      val pruned = subKeys
-        .join(prevKeys, Seq("subKey"), "left_anti")
-        .select("key")
-      val survivors = candidates.join(pruned, Seq("key"), "left_anti").as[Pattern]
-        .persist(StorageLevel.MEMORY_AND_DISK)
-
-      // 4. support: candidate x graph pairs from the parent's support set,
-      //    embedding-checked in executors, HAVING count >= t. Cogrouped by
-      //    graphId (round-6) so each transaction is deserialized and
-      //    re-indexed ONCE per level and checked against all its candidate
-      //    patterns, instead of once per (pattern, graph) join row.
-      val pairs = survivors
-        .joinWith(supportDS, survivors("parentKey") === supportDS("key"))
-        .map { case (pat, sp) => (sp.graphId, pat.vlabels, pat.edges, pat.key) }
-      val matched = pairs.groupByKey(_._1)
-        .cogroup(graphs.groupByKey(_.graphId)) { (gid, ps, gs) =>
-          val g = if (gs.hasNext) gs.next() else null
-          if (g == null) Iterator.empty
-          else {
-            val ctx = new GraphCtx(g)
-            ps.collect { case (_, vl, es, key) if embedsCtx(operator, vl, es, ctx) =>
-              SupportPair(key, gid)
-            }
+        // 3. apriori: every leaf-deleted (k-1)-subtree key must be frequent.
+        val subKeys = candidates.flatMap { c =>
+          val n = c.vlabels.size
+          val deg = Array.fill(n)(0)
+          for ((a, b, _) <- c.edges) { deg(a) += 1; deg(b) += 1 }
+          (spec.firstLeaf until n).filter(i => deg(i) <= 1).map { leaf =>
+            val keep = (0 until n).filter(_ != leaf)
+            val remap = keep.zipWithIndex.toMap
+            val es = c.edges.collect { case (a, b, l) if a != leaf && b != leaf => (remap(a), remap(b), l) }
+            (c.key, spec.canonical(keep.map(c.vlabels), es))
           }
-        }
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // Eager checkpoint (not persist): truncates freqKeys' lineage so the
-      // `results` union chain no longer reaches back through matched/
-      // survivors into the superseded level frames — which makes it SAFE to
-      // release those frames' checkpoint blocks immediately below.
-      val freqKeys = matched.groupBy("key").agg(count(lit(1)).as("support"))
-        .where(col("support") >= threshold)
-        .localCheckpoint(true)
+        }.toDF("key", "subKey")
+        // (the left-anti right side needs no dedupe)
+        val pruned = subKeys
+          .join(patternsDS.select(col("key").as("subKey")), Seq("subKey"), "left_anti")
+          .select("key")
+        val survivors = cache(candidates.join(pruned, Seq("key"), "left_anti").as[Pattern])
 
-      results = results.union(
-        freqKeys.select(lit(level).as("size"), col("key").as("cstring"), col("support")))
-      // Round-6.2: the next level's pattern dictionary and support relation
-      // are materialized by ONE eager checkpoint (a tagged union) instead of
-      // two separate localCheckpoint actions; patternsDS/supportDS become
-      // filters over the combined frame. The per-level lineage truncation is
-      // unchanged (the union IS the checkpoint — same discipline as the
-      // PageRank/CC iteration loops), and nPatterns comes from the already-
-      // materialized freqKeys (freqKeys ⊆ survivor keys, both key-unique,
-      // so |freqKeys| == |next patterns|).
-      val nextPatterns = survivors.join(freqKeys.select("key"), Seq("key"), "left_semi")
-        .select(col("vlabels"), col("edges"), col("key"), col("parentKey"),
-          lit(0L).as("graphId"), lit(true).as("isPat"))
-      val nextSupport = matched.join(freqKeys.select("key"), Seq("key"), "left_semi")
-        .select(lit(null).cast("array<string>").as("vlabels"),
-          lit(null).cast("array<struct<_1:int,_2:int,_3:string>>").as("edges"),
-          col("key"), lit("").as("parentKey"), col("graphId"), lit(false).as("isPat"))
-      val state = nextPatterns.unionByName(nextSupport).localCheckpoint(true)
-      patternsDS = state.where(col("isPat"))
-        .select("vlabels", "edges", "key", "parentKey").as[Pattern]
-      supportDS = state.where(!col("isPat")).select("key", "graphId").as[SupportPair]
-      nPatterns = freqKeys.count()
-      // superseded level frames: free the CHECKPOINT blocks, not just the
-      // cache entry (plain unpersist cannot reach them — GraphOps helper)
-      prevLevelFrames.foreach(GraphOps.releaseCheckpoint)
-      prevLevelFrames = Seq(state)
-      matched.unpersist(false)
-      survivors.unpersist(false)
-      levelCaches += freqKeys // feeds `results`; released after materialization
-      level += 1
+        // 4. support: candidate x graph pairs from the parent's support set,
+        //    embedding-checked in executors, HAVING count >= t. Cogrouped by
+        //    graphId so each transaction is deserialized and prepared for the
+        //    embedding test ONCE per level and checked against all its
+        //    candidate patterns, instead of once per (pattern, graph) row.
+        val pairs = survivors
+          .joinWith(supportDS, survivors("parentKey") === supportDS("key"))
+          .map { case (pat, sp) => (sp.graphId, pat.vlabels, pat.edges, pat.key) }
+        val matched = cache(pairs.groupByKey(_._1)
+          .cogroup(graphs.groupByKey(_.graphId)) { (gid, ps, gs) =>
+            if (!gs.hasNext) Iterator.empty
+            else {
+              val embeds = spec.embedder(gs.next())
+              ps.collect { case (_, vl, es, key) if embeds(vl, es) => SupportPair(key, gid) }
+            }
+          })
+        // Eager checkpoint (not persist): truncates freqKeys' lineage so the
+        // `results` union chain no longer reaches back through matched/
+        // survivors into the superseded level frames — which makes it SAFE
+        // to release those frames below. The same job observes |freqKeys|,
+        // which is |next patterns| (freqKeys ⊆ survivor keys, both
+        // key-unique): the loop's only per-level scalar costs no action.
+        val (freqKeys, stats) = GraphOps.checkpointObserved(
+          matched.groupBy("key").agg(count(lit(1)).as("support")).where(col("support") >= threshold),
+          Seq(count(lit(1))))
+        checkpoints += freqKeys
+        results = results.union(
+          freqKeys.select(lit(level).as("size"), col("key").as("cstring"), col("support")))
+
+        // The next level's pattern dictionary and support relation are
+        // materialized by ONE eager checkpoint (a tagged union);
+        // patternsDS/supportDS become filters over it.
+        val nextPatterns = survivors.join(freqKeys.select("key"), Seq("key"), "left_semi")
+          .select(col("vlabels"), col("edges"), col("key"), col("parentKey"),
+            lit(0L).as("graphId"), lit(true).as("isPat"))
+        val nextSupport = matched.join(freqKeys.select("key"), Seq("key"), "left_semi")
+          .select(lit(null).cast("array<string>").as("vlabels"),
+            lit(null).cast("array<struct<_1:int,_2:int,_3:string>>").as("edges"),
+            col("key"), lit("").as("parentKey"), col("graphId"), lit(false).as("isPat"))
+        val next = nextPatterns.unionByName(nextSupport).localCheckpoint(true)
+        checkpoints += next
+        // superseded level frames: free the CHECKPOINT blocks, not just the
+        // cache entry (plain unpersist cannot reach them — GraphOps helper)
+        if (state == null) { patternsDS.unpersist(false); supportDS.unpersist(false) }
+        else GraphOps.releaseCheckpoint(state)
+        state = next
+        patternsDS = state.where(col("isPat"))
+          .select("vlabels", "edges", "key", "parentKey").as[Pattern]
+        supportDS = state.where(!col("isPat")).select("key", "graphId").as[SupportPair]
+        matched.unpersist(false)
+        survivors.unpersist(false)
+        more = stats.getLong(0) > 0
+        level += 1
+      }
+      // One eager materialized result frame for the caller (same contract as
+      // the graph loops' outputs); every internal frame is released below.
+      results.orderBy("size", "cstring").localCheckpoint(true)
+    } finally {
+      cached.foreach(_.unpersist(false))
+      checkpoints.foreach(GraphOps.releaseCheckpoint)
     }
-
-    if (ownGraphs) graphs.unpersist(false)
-    vertOcc.unpersist(false)
-    // One eager materialized result frame for the caller (same contract as
-    // the graph loops' outputs); every internal frame is released below.
-    val out = results.orderBy("size", "cstring").localCheckpoint(true)
-    freq1.unpersist(false)
-    prevLevelFrames.foreach(GraphOps.releaseCheckpoint)
-    levelCaches.foreach(GraphOps.releaseCheckpoint)
-    out
   }
 
   // ------------------------------------------------------------------ lwgr
@@ -526,182 +569,13 @@ object FrequentSubtrees {
 
   /** Levelwise frequent ROOTED subtree mining over a rooted/directed forest
     * DB — the reference's `lwgr` executable (`lwmr_initAndCollect.c`,
-    * `lwmr_miningAndExtension.c`): same apriori level loop as [[mine]], with
-    * rooted canonical strings, directed extension triples (parentLabel,
-    * edgeLabel, childLabel) and the rooted embedding operator. */
+    * `lwmr_miningAndExtension.c`): [[mine]]'s level loop with rooted
+    * canonical strings, directed extension triples (parentLabel, edgeLabel,
+    * childLabel), non-root leaf deletions and the rooted embedding operator.
+    * Fails on a DB with a vertex of in-degree > 1 or a cycle. */
   def mineRooted(spark: SparkSession, verts: DataFrame, edges: DataFrame,
-      threshold: Long, maxPatternSize: Int): DataFrame = {
-    import spark.implicits._
-
-    // v/e single-consumer since round-6.2 — not persisted (see [[mine]])
-    val v = verts.select(col(verts.columns(0)).cast("long").as("graph_id"),
-      col(verts.columns(1)).cast("long").as("vid"), col(verts.columns(2)).cast("string").as("vlabel"))
-    val e = edges.select(col(edges.columns(0)).cast("long").as("graph_id"),
-      col(edges.columns(1)).cast("long").as("src"), col(edges.columns(2)).cast("long").as("dst"),
-      col(edges.columns(3)).cast("string").as("elabel"))
-
-    val graphs: Dataset[TGraph] = v.groupBy("graph_id")
-      .agg(collect_list(struct(col("vid"), col("vlabel"))).as("vs"))
-      .join(e.groupBy("graph_id")
-        .agg(collect_list(struct(col("src"), col("dst"), col("elabel"))).as("es")), Seq("graph_id"), "left")
-      .as[(Long, Seq[(Long, String)], Option[Seq[(Long, Long, String)]])]
-      .map { case (gid, vs, es) =>
-        val sorted = vs.sortBy(_._1)
-        val idx = sorted.map(_._1).zipWithIndex.toMap
-        val g = TGraph(gid, sorted.map(_._2),
-          es.getOrElse(Nil).map { case (s, d, l) => (idx(s), idx(d), l) })
-        // Rooted-forest precondition (embedsRooted's global-injectivity
-        // argument needs it, see its Scaladoc): acyclic AND in-degree <= 1 —
-        // a shared child (in-degree 2) is acyclic as an undirected graph but
-        // still lets sibling-injective matching reuse a graph vertex. Fail
-        // loudly instead of silently overcounting (ADVICE round 2).
-        val indeg = Array.fill(g.vlabels.size)(0)
-        for ((_, d, _) <- g.edges) {
-          indeg(d) += 1
-          require(indeg(d) <= 1,
-            s"FrequentSubtrees.mineRooted: transaction graph $gid has a vertex with " +
-              "in-degree > 1; the rooted miner requires a rooted-forest DB")
-        }
-        val parent = scala.collection.mutable.Map[Int, Int]()
-        def find(x: Int): Int = { var r = x; while (parent.getOrElse(r, r) != r) r = parent(r); r }
-        var merged = 0
-        for ((a, b, _) <- g.edges) {
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) { parent(ra) = rb; merged += 1 }
-        }
-        require(merged == g.edges.size,
-          s"FrequentSubtrees.mineRooted: transaction graph $gid is cyclic; the " +
-            "rooted miner requires a rooted-forest DB")
-        g
-      }
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // Distributed per-level pattern dictionary — same round-3 discipline as
-    // [[mine]] (only the directed extension alphabet is collected); vertOcc
-    // and the alphabet read the cached `graphs` (round-6.2, as in [[mine]]).
-    val vertOcc = graphs.flatMap(g => g.vlabels.distinct.map(l => (g.graphId, l)))
-      .toDF("graph_id", "vlabel").persist(StorageLevel.MEMORY_AND_DISK)
-    val freq1 = vertOcc.groupBy("vlabel").agg(count(lit(1)).as("support"))
-      .where(col("support") >= threshold)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var results: DataFrame = freq1
-      .select(lit(1).as("size"), col("vlabel").as("cstring"), col("support"))
-    var patternsDS: Dataset[Pattern] = freq1
-      .select("vlabel").as[String]
-      .map(l => Pattern(Seq(l), Nil, l, ""))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var nPatterns = patternsDS.count()
-    var supportDS: Dataset[SupportPair] = vertOcc
-      .join(freq1.select("vlabel"), "vlabel")
-      .select(col("vlabel").as("key"), col("graph_id").as("graphId"))
-      .as[SupportPair].persist(StorageLevel.MEMORY_AND_DISK)
-
-    // directed extension alphabet: (parentLabel, edgeLabel, childLabel)
-    val freqEdges: Seq[(String, String, String)] = graphs
-      .flatMap(g => g.edges.iterator.map { case (a, b, l) =>
-        (g.vlabels(a), l, g.vlabels(b))
-      }.toSet.iterator)
-      .toDF("sl", "elabel", "dl")
-      .groupBy("sl", "elabel", "dl").agg(count(lit(1)).as("support"))
-      .where(col("support") >= threshold)
-      .select("sl", "elabel", "dl").as[(String, String, String)].collect().toSeq
-    val bcEdges = spark.sparkContext.broadcast(freqEdges)
-    val levelCaches = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var prevLevelFrames: Seq[Dataset[_]] = Seq(patternsDS, supportDS)
-
-    var level = 2
-    while (level <= maxPatternSize && nPatterns > 0) {
-      val candidates = patternsDS
-        .flatMap { pat =>
-          val n = pat.vlabels.size
-          for {
-            u <- 0 until n
-            (pl, el, cl) <- bcEdges.value
-            if pat.vlabels(u) == pl
-          } yield {
-            val vl = pat.vlabels :+ cl
-            val es = pat.edges :+ ((u, n, el))
-            Pattern(vl, es, rootedCanonicalString(vl, es), pat.key)
-          }
-        }
-        .dropDuplicates("key")
-
-      // apriori over non-root leaf deletions
-      val prevKeys = patternsDS.select(col("key").as("subKey"))
-      val subKeys = candidates.flatMap { c =>
-        val n = c.vlabels.size
-        val deg = Array.fill(n)(0)
-        for ((a, b, _) <- c.edges) { deg(a) += 1; deg(b) += 1 }
-        (1 until n).filter(i => deg(i) <= 1).map { leaf =>
-          val keep = (0 until n).filter(_ != leaf)
-          val remap = keep.zipWithIndex.toMap
-          val vl = keep.map(c.vlabels)
-          val es = c.edges.collect { case (a, b, l) if a != leaf && b != leaf => (remap(a), remap(b), l) }
-          (c.key, rootedCanonicalString(vl, es))
-        }
-      }.toDF("key", "subKey")
-      // (left-anti right side needs no dedupe, round-6.2 — as in [[mine]])
-      val pruned = subKeys
-        .join(prevKeys, Seq("subKey"), "left_anti")
-        .select("key")
-      val survivors = candidates.join(pruned, Seq("key"), "left_anti").as[Pattern]
-        .persist(StorageLevel.MEMORY_AND_DISK)
-
-      // cogrouped by graphId — one deserialization + adjacency build per
-      // transaction per level (same restructure as [[mine]], round-6)
-      val pairs = survivors
-        .joinWith(supportDS, survivors("parentKey") === supportDS("key"))
-        .map { case (pat, sp) => (sp.graphId, pat.vlabels, pat.edges, pat.key) }
-      val matched = pairs.groupByKey(_._1)
-        .cogroup(graphs.groupByKey(_.graphId)) { (gid, ps, gs) =>
-          val g = if (gs.hasNext) gs.next() else null
-          if (g == null) Iterator.empty
-          else {
-            val gadj = g.edges.groupBy(_._1)
-            ps.collect { case (_, vl, es, key) if embedsRootedAdj(vl, es, g, gadj) =>
-              SupportPair(key, gid)
-            }
-          }
-        }
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // Eager checkpoint so `results` stops referencing the superseded
-      // level frames (see the identical discipline in [[mine]]).
-      val freqKeys = matched.groupBy("key").agg(count(lit(1)).as("support"))
-        .where(col("support") >= threshold)
-        .localCheckpoint(true)
-
-      results = results.union(
-        freqKeys.select(lit(level).as("size"), col("key").as("cstring"), col("support")))
-      // ONE combined eager checkpoint for the next level's state (round-6.2,
-      // see [[mine]] for the rationale and the |freqKeys| == |patterns| note)
-      val nextPatterns = survivors.join(freqKeys.select("key"), Seq("key"), "left_semi")
-        .select(col("vlabels"), col("edges"), col("key"), col("parentKey"),
-          lit(0L).as("graphId"), lit(true).as("isPat"))
-      val nextSupport = matched.join(freqKeys.select("key"), Seq("key"), "left_semi")
-        .select(lit(null).cast("array<string>").as("vlabels"),
-          lit(null).cast("array<struct<_1:int,_2:int,_3:string>>").as("edges"),
-          col("key"), lit("").as("parentKey"), col("graphId"), lit(false).as("isPat"))
-      val state = nextPatterns.unionByName(nextSupport).localCheckpoint(true)
-      patternsDS = state.where(col("isPat"))
-        .select("vlabels", "edges", "key", "parentKey").as[Pattern]
-      supportDS = state.where(!col("isPat")).select("key", "graphId").as[SupportPair]
-      nPatterns = freqKeys.count()
-      prevLevelFrames.foreach(GraphOps.releaseCheckpoint)
-      prevLevelFrames = Seq(state)
-      matched.unpersist(false)
-      survivors.unpersist(false)
-      levelCaches += freqKeys
-      level += 1
-    }
-
-    graphs.unpersist(false)
-    vertOcc.unpersist(false)
-    val out = results.orderBy("size", "cstring").localCheckpoint(true)
-    freq1.unpersist(false)
-    prevLevelFrames.foreach(GraphOps.releaseCheckpoint)
-    levelCaches.foreach(GraphOps.releaseCheckpoint)
-    out
-  }
+      threshold: Long, maxPatternSize: Int): DataFrame =
+    levelwise(spark, rootedSpec, verts, edges, None, threshold, maxPatternSize)
 
   // -------------------------------------------------------- treeEnumeration
 
@@ -718,47 +592,39 @@ object FrequentSubtrees {
   def enumerateTrees(spark: SparkSession, verts: DataFrame, edges: DataFrame,
       threshold: Long, maxPatternSize: Int): DataFrame = {
     import spark.implicits._
-    val v = verts.select(col(verts.columns(0)).cast("long").as("graph_id"),
-      col(verts.columns(1)).cast("long").as("vid"), col(verts.columns(2)).cast("string").as("vlabel"))
-    val e = edges.select(col(edges.columns(0)).cast("long").as("graph_id"),
-      col(edges.columns(1)).cast("long").as("src"), col(edges.columns(2)).cast("long").as("dst"),
-      col(edges.columns(3)).cast("string").as("elabel"))
+    val (v, e) = normalized(verts, edges)
     val freq1 = v.select("graph_id", "vlabel").distinct()
       .groupBy("vlabel").agg(count(lit(1)).as("support"))
       .where(col("support") >= threshold)
     var results: DataFrame = freq1.select(lit(1).as("size"), col("vlabel").as("cstring"))
-    var patternsDS: Dataset[Pattern] = freq1.select("vlabel").as[String]
+    val seed = freq1.select("vlabel").as[String]
       .map(l => Pattern(Seq(l), Nil, l, ""))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val freqEdges: Seq[(String, String, String)] = e
+    val unordered = frequentTriples(e
       .join(v.select(col("graph_id"), col("vid").as("src"), col("vlabel").as("sl")), Seq("graph_id", "src"))
       .join(v.select(col("graph_id"), col("vid").as("dst"), col("vlabel").as("dl")), Seq("graph_id", "dst"))
       .select(col("graph_id"), least(col("sl"), col("dl")).as("la"), col("elabel"),
         greatest(col("sl"), col("dl")).as("lb"))
-      .distinct()
-      .groupBy("la", "elabel", "lb").agg(count(lit(1)).as("support"))
-      .where(col("support") >= threshold)
-      .select("la", "elabel", "lb").as[(String, String, String)].collect().toSeq
-    val bcEdges = spark.sparkContext.broadcast(freqEdges)
+      .distinct().drop("graph_id"), threshold)
+    val bcEdges = spark.sparkContext.broadcast(unordered.flatMap { case (a, l, b) => bothWays(a, l, b) }.distinct)
+    var patternsDS: Dataset[Pattern] = seed
+    // `results` reads EVERY level's checkpoint, so all stay resident until
+    // `out` is checkpointed.
+    val levelCheckpoints = ArrayBuffer[DataFrame]()
+    var more = bcEdges.value.nonEmpty // as in [[levelwise]]: no level-1 count
     var level = 2
-    var n = patternsDS.count()
-    // Unlike [[mine]], the `results` union chain here references EVERY
-    // level's checkpoint directly (there is no per-level freqKeys frame), so
-    // superseded levels must stay resident until the final materialization —
-    // they are collected and released together after `out` is checkpointed.
-    val levelCheckpoints = scala.collection.mutable.ArrayBuffer[Dataset[Pattern]]()
-    while (level <= maxPatternSize && n > 0) {
-      val next = patternsDS.flatMap(pat => extensionsOf(pat, bcEdges.value))
-        .dropDuplicates("key").localCheckpoint(true)
-      if (levelCheckpoints.isEmpty) patternsDS.unpersist(false) // the cached seed
-      patternsDS = next
+    while (level <= maxPatternSize && more) {
+      val (next, stats) = GraphOps.checkpointObserved(
+        patternsDS.flatMap(pat => extensionsOf(pat, bcEdges.value, freeCanonical)).dropDuplicates("key").toDF(),
+        Seq(count(lit(1))))
       levelCheckpoints += next
-      n = next.count()
+      patternsDS = next.as[Pattern]
+      more = stats.getLong(0) > 0
       results = results.union(next.select(lit(level).as("size"), col("key").as("cstring")))
       level += 1
     }
     val out = results.orderBy("size", "cstring").localCheckpoint(true)
-    if (levelCheckpoints.isEmpty) patternsDS.unpersist(false)
+    seed.unpersist(false)
     levelCheckpoints.foreach(GraphOps.releaseCheckpoint)
     out
   }
@@ -787,36 +653,20 @@ object FrequentSubtrees {
       operator: EmbeddingOp = ExactSubtree,
       supportSetCap: Int = 5000000): DataFrame = {
     import spark.implicits._
-    // v/e single-consumer since round-6.2 — not persisted (see [[mine]])
-    val v = verts.select(col(verts.columns(0)).cast("long").as("graph_id"),
-      col(verts.columns(1)).cast("long").as("vid"), col(verts.columns(2)).cast("string").as("vlabel"))
-    val e = edges.select(col(edges.columns(0)).cast("long").as("graph_id"),
-      col(edges.columns(1)).cast("long").as("src"), col(edges.columns(2)).cast("long").as("dst"),
-      col(edges.columns(3)).cast("string").as("elabel"))
-    val graphsK = keyedGraphCtx(transactionGraphs(spark, v, e, operator),
+    val graphsK = keyedGraphCtx(transactionGraphs(spark, verts, edges, freePreparation(operator)),
       GraphOps.defaultParallelism(spark))
     graphsK.count() // materialize once; every expansion filters this cache
 
-    // vertOcc + alphabet from the partitioned graph cache (round-6.2, as in [[mine]])
+    // vertOcc + alphabet from the partitioned graph cache, as in [[mine]]
     val vertOcc = graphsK.flatMap { case (gid, ctx) => ctx.g.vlabels.distinct.map(l => (gid, l)) }
       .toDF("graph_id", "vlabel").persist(StorageLevel.MEMORY_AND_DISK)
     val freq1 = vertOcc.groupBy("vlabel").agg(count(lit(1)).as("support"))
       .where(col("support") >= threshold)
       .as[(String, Long)].collect().sortBy(_._1)
-    val freqEdges: Seq[(String, String, String)] = graphsK
-      .flatMap { case (_, ctx) =>
-        val g = ctx.g
-        g.edges.iterator.map { case (a, b, l) =>
-          val (la, lb) = (g.vlabels(a), g.vlabels(b))
-          if (la <= lb) (la, l, lb) else (lb, l, la)
-        }.toSet.iterator
-      }
-      .toDF("la", "elabel", "lb")
-      .groupBy("la", "elabel", "lb").agg(count(lit(1)).as("support"))
-      .where(col("support") >= threshold)
-      .select("la", "elabel", "lb").as[(String, String, String)].collect().toSeq
+    val freqEdges = frequentTriples(
+      graphsK.flatMap { case (_, ctx) => orientedTriples(ctx.g).toSet }.toDF(), threshold)
 
-    val results = scala.collection.mutable.ArrayBuffer[(Int, String, Long)]()
+    val results = ArrayBuffer[(Int, String, Long)]()
     val visited = scala.collection.mutable.Set[String]()
     val stack = scala.collection.mutable.Stack[(Pattern, Option[Array[Long]])]()
     for ((label, sup) <- freq1) {
@@ -834,7 +684,7 @@ object FrequentSubtrees {
     while (stack.nonEmpty) {
       val (pat, supOpt) = stack.pop()
       if (pat.vlabels.size < maxPatternSize) {
-        val children = extensionsOf(pat, freqEdges)
+        val children = extensionsOf(pat, freqEdges, freeCanonical)
           .groupBy(_.key).map(_._2.head).toSeq
           .filterNot(c => visited.contains(c.key))
         if (children.nonEmpty) {

@@ -23,22 +23,11 @@ object Schemas {
     * half-edges, mirroring reference `loading.c:407-425`. */
   final case class Edge(src: Long, dst: Long)
 
-  /** Labeled edge (reference `VertexList.label`, `graph.h:26`). */
-  final case class LabeledEdge(src: Long, dst: Long, label: String)
-
   /** Vertex with string label (reference `Vertex.label`, `graph.h:11`). */
   final case class Vertex(vid: Long, label: String)
 
-  /** PageRank iteration state: rank plus a static dangling flag so the
-    * per-iteration convergence action also yields next iteration's
-    * dangling mass in a single pass. */
-  final case class Rank(vid: Long, rank: Double, dangling: Boolean)
-
   /** Connected-component label (reference `listComponents.c:306-319`). */
   final case class Component(vid: Long, component: Long)
-
-  /** Propagated label state (WL refinement / majority-vote LP). */
-  final case class VertexLabel(vid: Long, label: Long)
 
   final case class Degree(vid: Long, degree: Long)
 }

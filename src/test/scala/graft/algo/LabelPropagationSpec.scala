@@ -1,5 +1,7 @@
 package graft.algo
 
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
@@ -109,5 +111,46 @@ class LabelPropagationSpec extends AnyFunSuite with SparkTestBase {
         assert(exchanges.size == 1, s"$mode: $exchanges")
       }
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+
+  test("WL rounds read the cached symmetric edges as they are: no round shuffles on (src, dst)") {
+    val e = Generators.barabasiAlbert(40, 2, seed = 5L)
+    val df = Generators.edgesDF(spark, e)
+    val vids = (e.map(_._1) ++ e.map(_._2)).distinct.sorted
+    val init = spark.createDataFrame(vids.map(v => (v, "a"))).toDF("vid", "label")
+    // without AQE the recorded plan is the final physical plan
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val (got, rounds) = try ActionLog.during(spark) { log =>
+      val labels = LabelPropagation.wlRefine(spark, df, init, 2)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      (labels, log.entries.collect { case ("localCheckpoint", qe) => qe.executedPlan })
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    val want = ReferenceOracles.wlPartition(e, vids.map(_ -> "a").toMap, 2)
+    assert(partitionOf(got.map { case (k, v) => k -> (v: Any) }) ==
+      partitionOf(want.map { case (k, v) => k -> (v: Any) }))
+    assert(rounds.size == 2)
+    for (plan <- rounds) {
+      val keys = plan.collect { case x: ShuffleExchangeExec => x.outputPartitioning }.collect {
+        case h: HashPartitioning => h.expressions.collect { case a: AttributeReference => a.name }
+      }
+      assert(!keys.contains(Seq("src", "dst")), plan)
+    }
+  }
+
+  test("a caller's checkpointed start labels stay readable after every mode") {
+    val e = Generators.barabasiAlbert(40, 2, seed = 5L)
+    val df = Generators.edgesDF(spark, e)
+    val vids = (e.map(_._1) ++ e.map(_._2)).distinct
+    val modes = Seq[(String, org.apache.spark.sql.DataFrame => Any)](
+      "wlRefine" -> (l => LabelPropagation.wlRefine(spark, df, l, 2).collect()),
+      "wlRefineHashed" -> (l => LabelPropagation.wlRefineHashed(spark, df, l, 2).collect()),
+      "majority 1 round" -> (l => LabelPropagation.majority(spark, df, 1, Some(l)).collect()),
+      "majority 2 rounds" -> (l => LabelPropagation.majority(spark, df, 2, Some(l)).collect()))
+    for ((mode, call) <- modes) {
+      val labels = spark.createDataFrame(vids.map(v => (v, v % 3))).toDF("vid", "label").localCheckpoint(true)
+      call(labels)
+      assert(labels.count() == vids.size, mode)
+    }
   }
 }

@@ -1,7 +1,11 @@
 package graft.mining
 
+import java.util.concurrent.atomic.AtomicBoolean
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkTestBase
+import graft.{ActionLog, SparkTestBase}
 import graft.mining.SubtreeIso.LTree
 
 class FrequentSubtreesSpec extends AnyFunSuite with SparkTestBase {
@@ -207,5 +211,58 @@ class FrequentSubtreesSpec extends AnyFunSuite with SparkTestBase {
     val got2 = FrequentSubtrees.enumerateTrees(spark, verts2, edges, 2L, maxPatternSize = 2)
       .collect().map(r => (r.getInt(0), r.getString(1))).toSet
     assert(got2.isEmpty) // nothing reaches support 2 on a 1-graph DB
+  }
+
+  /** The labeled forest DB of the oracle cases, as (verts, edges). */
+  private def forestDB() = {
+    val graphs = Seq[(Long, Seq[String], Seq[(Int, Int, String)])](
+      (0L, Seq("a", "b", "a", "c"), Seq((0, 1, "x"), (1, 2, "x"), (2, 3, "y"))),
+      (1L, Seq("a", "b", "a"), Seq((0, 1, "x"), (1, 2, "x"))),
+      (2L, Seq("b", "a", "a", "a"), Seq((0, 1, "x"), (0, 2, "x"), (0, 3, "y"))),
+      (3L, Seq("c", "b", "a", "a"), Seq((0, 1, "y"), (1, 2, "x"), (1, 3, "x"))))
+    (graphs.flatMap { case (g, vl, _) => vl.zipWithIndex.map { case (l, i) => (g, i.toLong, l) } }
+      .toDF("graph_id", "vid", "vlabel"),
+      graphs.flatMap { case (g, _, es) => es.map { case (a, b, l) => (g, a.toLong, b.toLong, l) } }
+        .toDF("graph_id", "src", "dst", "elabel"))
+  }
+
+  test("a level is two checkpoint actions: the pattern count rides on the first") {
+    val (verts, edges) = forestDB()
+    val (sizes, names) = ActionLog.during(spark) { log =>
+      val got = FrequentSubtrees.mine(spark, verts, edges, 1L, maxPatternSize = 4)
+        .collect().map(_.getInt(0)).toSet
+      (got, log.names)
+    }
+    assert(sizes == Set(1, 2, 3, 4), sizes) // so levels 2, 3 and 4 all ran
+    // set-up collects the extension alphabet; each level checkpoints its
+    // frequent keys and its next state; then the result checkpoint and the
+    // collect above
+    assert(names == Seq("collect") ++ Seq.fill(2 * 3)("localCheckpoint") ++
+      Seq("localCheckpoint", "collect"), names)
+  }
+
+  test("a failed level rethrows and leaves no persisted RDD behind") {
+    val (verts, edges) = forestDB()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // the first plan that reads a checkpoint (level 2's next state, over its
+    // frequent keys) fails to optimize, once the set-up caches, the level's
+    // survivors and matches and its frequent-key checkpoint all exist
+    val fired = new AtomicBoolean(false)
+    object FailOnCheckpointRead extends Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan = {
+        if (plan.exists(_.isInstanceOf[LogicalRDD]) && fired.compareAndSet(false, true))
+          throw new IllegalStateException("level failed")
+        plan
+      }
+    }
+    val rules = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = Seq(FailOnCheckpointRead)
+    val err = try intercept[Exception](FrequentSubtrees.mine(spark, verts, edges, 2L, maxPatternSize = 3))
+      finally spark.experimental.extraOptimizations = rules
+    assert(fired.get)
+    val messages = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+    assert(messages.exists(_.contains("level failed")), err)
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"left persisted RDDs $left")
   }
 }

@@ -1,7 +1,7 @@
 package graft.mining
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkTestBase
+import graft.{ActionLog, SparkTestBase}
 import graft.mining.FrequentSubtrees.TGraph
 
 /** lwgr: rooted canonical strings, rooted embedding, rooted miner vs a
@@ -81,5 +81,45 @@ class RootedMinerSpec extends AnyFunSuite with SparkTestBase {
       val want = bruteRooted(graphs, t, 4)
       assert(got == want, s"threshold=$t\ngot=${got.toSeq.sorted}\nwant=${want.toSeq.sorted}")
     }
+  }
+
+  private def rootedDB(graphs: Seq[(Long, Seq[String], Seq[(Int, Int, String)])]) =
+    (graphs.flatMap { case (g, vl, _) => vl.zipWithIndex.map { case (l, i) => (g, i.toLong, l) } }
+      .toDF("graph_id", "vid", "vlabel"),
+      graphs.flatMap { case (g, _, es) => es.map { case (a, b, l) => (g, a.toLong, b.toLong, l) } }
+        .toDF("graph_id", "src", "dst", "elabel"))
+
+  test("rooted miner rejects a shared child and a directed cycle, and leaves no persisted RDD") {
+    val path = (0L, Seq("a", "b", "c"), Seq((0, 1, "x"), (1, 2, "x")))
+    val dbs = Seq(
+      // graph 7: a -> c <- b, acyclic as an undirected graph
+      "in-degree > 1" -> Seq(path, (7L, Seq("a", "b", "c"), Seq((0, 2, "x"), (1, 2, "x")))),
+      // graph 8: a -> b -> c -> a, every in-degree 1
+      "is cyclic" -> Seq(path, (8L, Seq("a", "b", "c"), Seq((0, 1, "x"), (1, 2, "x"), (2, 0, "x")))))
+    for ((why, graphs) <- dbs) {
+      val (verts, edges) = rootedDB(graphs)
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val err = intercept[Exception](FrequentSubtrees.mineRooted(spark, verts, edges, 1L, maxPatternSize = 3))
+      val causes = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists(t => t.isInstanceOf[IllegalArgumentException] &&
+        String.valueOf(t.getMessage).contains(why)), err)
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"$why: left persisted RDDs $left")
+    }
+  }
+
+  test("a rooted level is two checkpoint actions: the pattern count rides on the first") {
+    val (verts, edges) = rootedDB(Seq(
+      (0L, Seq("a", "b", "a", "c"), Seq((0, 1, "x"), (1, 2, "x"), (2, 3, "y"))),
+      (1L, Seq("a", "b", "a"), Seq((0, 1, "x"), (1, 2, "x"))),
+      (2L, Seq("b", "a", "a", "a"), Seq((0, 1, "x"), (0, 2, "x"), (0, 3, "y")))))
+    val (sizes, names) = ActionLog.during(spark) { log =>
+      val got = FrequentSubtrees.mineRooted(spark, verts, edges, 1L, maxPatternSize = 4)
+        .collect().map(_.getInt(0)).toSet
+      (got, log.names)
+    }
+    assert(sizes == Set(1, 2, 3, 4), sizes) // so levels 2, 3 and 4 all ran
+    assert(names == Seq("collect") ++ Seq.fill(2 * 3)("localCheckpoint") ++
+      Seq("localCheckpoint", "collect"), names)
   }
 }
