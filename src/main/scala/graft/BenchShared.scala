@@ -64,6 +64,14 @@ private[graft] object BenchShared {
     * vectors evicted every iteration, recompute storms). Used for both. */
   def execMemMb: Int = sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM_MB", "8192").toInt
 
+  /** Where this JVM loaded the graft classes from (their classes directory
+    * or jar), for local-cluster executors, which are fresh JVMs; the JVM's
+    * whole class path when the class loader names no code source. */
+  def graftClassPath: String =
+    Option(getClass.getProtectionDomain.getCodeSource).flatMap(cs => Option(cs.getLocation))
+      .map(url => java.nio.file.Paths.get(url.toURI).toString)
+      .getOrElse(sys.props("java.class.path"))
+
   /** The pinned measurement session: storage-protected memory, zero
     * locality wait (a benchmark must never hold a task wave hostage to
     * block locality), tmpfs shuffle dirs (single-box analogue of
@@ -82,7 +90,7 @@ private[graft] object BenchShared {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/spark-local"))
-      .config("spark.executor.extraClassPath", "/root/repo/target/scala-2.13/classes")
+      .config("spark.executor.extraClassPath", graftClassPath)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -120,14 +120,10 @@ object PageRank {
       numPartitions: Option[Int] = None,
       checkpoint: Option[IterationCheckpoint] = None,
       onIterationsStart: () => Unit = () => (),
-      onIterationEnd: Int => Unit = _ => ()): Result = {
+      onIterationEnd: Int => Unit = _ => ()): Result = withHashCsrBuild(spark) {
 
     val setupT0 = System.nanoTime()
     val p = numPartitions.getOrElse(GraphOps.defaultParallelism(spark))
-    // collect_list's ObjectHashAggregate falls back to sort-based agg after a
-    // tiny default key threshold — raise it so the one-time CSR build stays a
-    // hash aggregation (keys are vertex ids; values are small arrays).
-    spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "20000000")
     // Scanned exactly twice during setup (adj build + vertex set), so cache it.
     val e = GraphOps.canonicalEdges(edges).persist(StorageLevel.MEMORY_AND_DISK)
 
@@ -161,8 +157,7 @@ object PageRank {
     * restart runs skip the canonicalize/dedupe/aggregate setup — the
     * "build once, iterate many" shape of a production link-graph store
     * (at scale: the Iceberg-materialized adjacency of SURVEY §4). */
-  def writeStatic(spark: SparkSession, edges: DataFrame, path: String): Unit = {
-    spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "20000000")
+  def writeStatic(spark: SparkSession, edges: DataFrame, path: String): Unit = withHashCsrBuild(spark) {
     val e = GraphOps.canonicalEdges(edges).persist(StorageLevel.MEMORY_AND_DISK)
     // explicit wide partitioning for the one-time build: at a low session
     // shuffle-partition setting the per-task collect_list hash state over
@@ -178,6 +173,19 @@ object PageRank {
       .select(col("vid"), col("hasOut").isNull.as("dangling"))
       .write.mode("overwrite").parquet(s"$path/verts")
     e.unpersist(false)
+  }
+
+  /** Runs `body` with collect_list's ObjectHashAggregate kept a hash
+    * aggregation: it falls back to sort-based agg after a tiny default key
+    * threshold, so the threshold is raised for the one-time CSR build (keys
+    * are vertex ids; values are small arrays). The caller's value is put
+    * back, or the key unset, when `body` returns or throws. */
+  private def withHashCsrBuild[T](spark: SparkSession)(body: => T): T = {
+    val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+    val prev = spark.conf.getAll.get(key) // getOption would read the default as a value
+    spark.conf.set(key, "20000000")
+    try body
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   /** Run the iteration loop from [[writeStatic]] output: read + co-partition

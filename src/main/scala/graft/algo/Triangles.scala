@@ -1,26 +1,57 @@
 package graft.algo
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable.LongMap
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.graph.GraphOps
 
-/** Triangle counting via degree-oriented sorted-adjacency intersection
-  * (SURVEY.md §2.8.3; BASELINE.json north_rule).
+/** Triangles by degree-oriented sorted-adjacency intersection (SURVEY.md
+  * §2.8.3; BASELINE.json north_rule).
   *
-  * Reference semantics: wedge-check enumeration — for each center u, each
-  * neighbor pair (v,w), test edge (v,w) (reference `graph.c:105-123`
-  * `commonNeighborCount`; reference `executables/patternExtractor.c:267-295`,
-  * where each closed triangle is found three times, once per center). The
-  * distributed analogue orients each undirected edge from the endpoint with
-  * lower (degree, vid) to the higher one, so every triangle is counted
-  * exactly once and no vertex scans more than O(sqrt(m)) oriented neighbors —
-  * the standard mitigation for power-law hubs (the oriented out-degree of a
-  * hub is small because almost all its neighbors have lower degree).
+  * The reference finds triangles with one wedge check, `commonNeighborCount`
+  * (`graph.c:105-123`), and uses it for counts, per-vertex tallies and
+  * fingerprints (`executables/patternExtractor.c:121-177, 267-295`, where
+  * each triangle is found once per center). So does this object: one kernel,
+  * [[pairs]], walks every pair (u, N(u), v, N(v)) with v ∈ N(u) of a sorted
+  * adjacency and hands each partition's pairs to a per-use fold, and every
+  * public entry point is such a fold over the common entries of N(u) and
+  * N(v) ([[Common]]). A new triangle use is one more fold, not a new kernel.
+  *
+  * Over the oriented adjacency (each undirected edge points from the
+  * endpoint with lower (degree, vid) to the higher one) the common entries
+  * of a pair are the triangles through the edge u -> v, so every triangle is
+  * found exactly once, and no vertex scans more than O(sqrt(m)) oriented
+  * neighbours: a power-law hub's oriented out-degree is small.
+  *
+  * The pairs come from one of two sources, picked by one size probe of the
+  * persisted adjacency against [[MaxBroadcastAdjEntries]]. Under the budget
+  * the adjacency is collected and broadcast, and each task walks the pairs of
+  * its share of the source ids with no join. Over it, the pairs come from one
+  * shuffled join of (u, v, N(u)) with (v, N(v)). The shuffled source stays
+  * because it is the only plan that runs on graphs over the budget (the
+  * north-rule web graphs), whose adjacency no executor can hold. Both
+  * sources feed the same fold, so they give the same rows.
   */
 object Triangles {
 
-  /** Oriented edges: src -> dst iff (deg(src), src) < (deg(dst), dst). */
-  private def orient(spark: SparkSession, edges: DataFrame): DataFrame = {
+  /** Adjacency-entry budget under which the adjacency is collected and
+    * broadcast instead of self-joined (guide §3.1): 4M longs is ~32 MB on
+    * every executor, far below the 8 GB relation cap. The co-supplier-style
+    * small-dimension graphs of the query suite sit orders of magnitude below
+    * it; the north-rule web graphs (12M+ vertices) sit far above it. */
+  private val MaxBroadcastAdjEntries = 4L * 1000 * 1000
+
+  /** One pair (u, N(u), v, N(v)) of the walk. */
+  private type Pair = (Long, Array[Long], Long, Array[Long])
+
+  /** Oriented edges: src -> dst iff (deg(src), src) < (deg(dst), dst). The
+    * degree aggregate is joined back once per endpoint, not attached with
+    * two windows: at the sizes the broadcast budget serves, the aggregate is
+    * small enough to broadcast, while each window re-shuffles every edge
+    * (traced `linkgraph_scale`: twice the shuffle bytes, a quarter more task
+    * CPU, no faster). */
+  private def orient(edges: DataFrame): DataFrame = {
     val sym = GraphOps.symmetrize(edges)
     val deg = sym.groupBy(col("src").as("vid")).agg(count(lit(1)).as("deg"))
     sym
@@ -30,343 +61,187 @@ object Triangles {
       .select(col("src"), col("dst"))
   }
 
-  /** Total-adjacency-entry budget under which the oriented adjacency is
-    * collected and broadcast instead of self-joined (guide §3.1): 4M longs
-    * is ~32 MB on every executor — comfortably inside the broadcast budget,
-    * far below the 8 GB relation cap. The co-supplier-style small-dimension
-    * graphs of the query suite sit orders of magnitude below it; the
-    * north-rule web graphs (12M+ vertices) sit far above and keep the
-    * shuffled plan. */
-  private val MaxBroadcastAdjEntries = 4L * 1000 * 1000
+  /** `adj`(src, nbrs): the sorted, distinct neighbours of each source.
+    * `collect_set`, not `collect_list`: over [[GraphOps.symmetrize]] the
+    * optimizer then drops the distinct below it, one exchange fewer. */
+  private def adjacency(edges: DataFrame): DataFrame =
+    edges.groupBy(col("src")).agg(sort_array(collect_set(col("dst"))).as("nbrs"))
 
-  /** Collect the adjacency when it fits [[MaxBroadcastAdjEntries]].
-    * The frame is persisted across the size probe + collect so the
-    * underlying edge derivation runs once; for over-budget graphs the probe
-    * costs one adjacency materialization (a map + one aggregate, no join) —
-    * small against the two array-carrying join exchanges the broadcast
-    * saves when it applies (measured: 263 MB shuffled per triangle query on
-    * the sf0.1 co-supplier graph, with the full neighbor array duplicated
-    * onto every oriented edge row). */
-  private def collectSmallAdj(adjDf: DataFrame): Option[Map[Long, Array[Long]]] = {
-    val pers = adjDf.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  /** The one wedge check: `apply` writes the common entries of two sorted,
+    * duplicate-free arrays to `ws` (grown to fit) and returns how many. A
+    * fold keeps one per partition, so no pair or triangle allocates. */
+  private final class Common {
+    var ws = new Array[Long](64)
+    def apply(a: Array[Long], b: Array[Long]): Int = {
+      if (ws.length < a.length) ws = new Array[Long](math.max(a.length, 2 * ws.length))
+      var n = 0; var i = 0; var j = 0
+      while (i < a.length && j < b.length) {
+        if (a(i) == b(j)) { ws(n) = a(i); n += 1; i += 1; j += 1 }
+        else if (a(i) < b(j)) i += 1
+        else j += 1
+      }
+      n
+    }
+  }
+
+  /** The kernel: every pair (u, N(u), v, N(v)) with v ∈ N(u) of `adj`
+    * (N(v) empty where v has no row), folded one partition at a time.
+    *
+    * `adj` is persisted across the size probe and the collect, so its
+    * derivation runs once, and unpersisted before this returns, on success
+    * or failure. The broadcast source hands the source ids to the tasks with
+    * `parallelize`, which is no exchange. Over the budget the probe costs
+    * one adjacency materialization the shuffled join does not reuse: small
+    * against the two array-carrying exchanges the broadcast saves when it
+    * applies (measured: 263 MB shuffled per triangle query on the sf0.1
+    * co-supplier graph). */
+  private def pairs[T: Encoder](adj: DataFrame, budget: Long)(
+      fold: Iterator[Pair] => Iterator[T]): Dataset[T] = {
+    val spark = adj.sparkSession
+    import spark.implicits._
+    val pers = adj.persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val total = pers.agg(coalesce(sum(size(col("nbrs"))), lit(0L))).head().getLong(0)
-      if (total <= MaxBroadcastAdjEntries)
-        Some(pers.collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toArray).toMap)
-      else None
+      if (pers.agg(coalesce(sum(size(col("nbrs"))), lit(0L))).head().getLong(0) <= budget) {
+        val local = LongMap.from(pers.as[(Long, Array[Long])].collect())
+        val bc = spark.sparkContext.broadcast(local)
+        val us = spark.sparkContext.parallelize(local.keys.toSeq.sorted, GraphOps.defaultParallelism(spark))
+        spark.createDataset(us.mapPartitions(it => fold(it.flatMap { u =>
+          val un = bc.value(u)
+          un.iterator.map(v => (u, un, v, bc.value.getOrElse(v, Array.emptyLongArray)))
+        }))(implicitly[Encoder[T]].clsTag))
+      } else
+        pers.select(col("src").as("u"), col("nbrs").as("un"), explode(col("nbrs")).as("v"))
+          .join(pers.select(col("src").as("v"), col("nbrs").as("vn")), Seq("v"), "left")
+          .select(col("u"), col("un"), col("v"), coalesce(col("vn"), typedLit(Array.emptyLongArray)))
+          .as[Pair].mapPartitions(fold)
     } finally pers.unpersist(false)
   }
 
-  /** Sorted-array intersection (same element set as `array_intersect` on
-    * the sorted, duplicate-free adjacency arrays). */
-  private def intersectSorted(a: Array[Long], b: Array[Long]): Array[Long] = {
-    val out = Array.newBuilder[Long]
-    var i = 0; var j = 0
-    while (i < a.length && j < b.length) {
-      if (a(i) == b(j)) { out += a(i); i += 1; j += 1 }
-      else if (a(i) < b(j)) i += 1
-      else j += 1
-    }
-    out.result()
-  }
+  /** All triangles as (a, b, c) rows, each exactly once: a -> b, a -> c and
+    * b -> c in the orientation. */
+  def enumerate(spark: SparkSession, edges: DataFrame): DataFrame =
+    enumerate(spark, edges, MaxBroadcastAdjEntries)
 
-  /** Two-pointer match count over sorted arrays — `intersectSorted(a,b).length`
-    * without building the array (the count path runs this ~|E| times over a
-    * triangle-dense graph; builder churn was measurable GC). */
-  private def intersectCountSorted(a: Array[Long], b: Array[Long]): Long = {
-    var n = 0L
-    var i = 0; var j = 0
-    while (i < a.length && j < b.length) {
-      if (a(i) == b(j)) { n += 1; i += 1; j += 1 }
-      else if (a(i) < b(j)) i += 1
-      else j += 1
-    }
-    n
-  }
-
-  /** All triangles as canonical (a, b, c) rows (each exactly once).
-    *
-    * No persist: the oriented edge list is DERIVED from the adjacency
-    * aggregate by explode, so the aggregate subtree appears exactly twice
-    * with an identical child exchange and Catalyst's ReuseExchange computes
-    * the upstream once (round 3 persisted `oriented`/`adj` here and never
-    * unpersisted them — in a shared session the leaked blocks evicted other
-    * queries' caches; a lazily returned frame cannot own cache cleanup). */
-  def enumerate(spark: SparkSession, edges: DataFrame): DataFrame = {
+  private[algo] def enumerate(spark: SparkSession, edges: DataFrame, budget: Long): DataFrame = {
     import spark.implicits._
-    val adj = orient(spark, edges)
-      .groupBy(col("src"))
-      .agg(sort_array(collect_set(col("dst"))).as("nbrs"))
-    collectSmallAdj(adj) match {
-      case Some(adjMap) =>
-        // Small-dimension graph: broadcast the whole oriented adjacency and
-        // enumerate with ZERO joins — only the vertex-id list (|V| longs) is
-        // distributed; each task intersects against the broadcast arrays.
-        // The kernel emits ONE row per oriented edge (the intersection
-        // array) and the per-triangle rows come from a codegen'd explode —
-        // a per-triangle Scala tuple stream allocated ~10^8 objects on the
-        // triangle-dense co-supplier graph (measured as GC time).
-        // Same (a, b, c) row multiset as the join formulation.
-        val bc = spark.sparkContext.broadcast(adjMap)
-        val p = GraphOps.defaultParallelism(spark)
-        spark.createDataset(adjMap.keys.toSeq.sorted).repartition(p)
-          .flatMap { u =>
-            val un = bc.value(u)
-            un.iterator.flatMap { v =>
-              bc.value.get(v) match {
-                case Some(vn) =>
-                  val cs = intersectSorted(un, vn)
-                  if (cs.isEmpty) Iterator.empty else Iterator.single((u, v, cs))
-                case None => Iterator.empty
-              }
-            }
-          }
-          .toDF("a", "b", "cs")
-          .select(col("a"), col("b"), explode(col("cs")).as("c"))
-      case None => enumerateFromAdj(adj)
-    }
+    // one row per pair that closes a triangle; the per-triangle rows come
+    // from a codegen'd explode (a per-triangle tuple stream allocated ~10^8
+    // objects on the triangle-dense co-supplier graph, measured as GC time)
+    pairs(adjacency(orient(edges)), budget) { it =>
+      val c = new Common
+      it.flatMap { case (u, un, v, vn) =>
+        val n = c(un, vn)
+        if (n == 0) None else Some((u, v, java.util.Arrays.copyOf(c.ws, n)))
+      }
+    }.toDF("a", "b", "cs").select(col("a"), col("b"), explode(col("cs")).as("c"))
   }
 
-  /** The shuffled-join enumeration over a prebuilt oriented-adjacency frame:
-    * for each oriented edge (u,v), triangles through it are the common
-    * oriented-out-neighbors of u and v. */
-  private def enumerateFromAdj(adj: DataFrame): DataFrame =
-    adj.select(col("src"), explode(col("nbrs")).as("dst"), col("nbrs").as("unbrs"))
-      .join(adj.select(col("src").as("dst"), col("nbrs").as("vnbrs")), "dst")
-      .select(col("src").as("a"), col("dst").as("b"),
-        explode(array_intersect(col("unbrs"), col("vnbrs"))).as("c"))
+  /** Global triangle count (fixture goldens: K_n -> C(n,3), trees/paths ->
+    * 0): the summed intersection sizes, with no row per triangle. */
+  def globalCount(spark: SparkSession, edges: DataFrame): Long =
+    globalCount(spark, edges, MaxBroadcastAdjEntries)
 
-  /** Global triangle count (fixture goldens: K_n -> C(n,3), trees/paths -> 0).
-    *
-    * Counts WITHOUT materializing a row per triangle: the count equals the
-    * summed intersection size over oriented edges, so the final
-    * `explode(array_intersect)` of [[enumerate]] — which at sf0.1 produced
-    * ~10^7 rows only to be counted — is replaced by `sum(size(...))` in the
-    * same join (guide §1.1 first-principles: no pass over data the result
-    * does not need). Identical value: explode emits exactly one row per
-    * intersection element. */
-  def globalCount(spark: SparkSession, edges: DataFrame): Long = {
+  private[algo] def globalCount(spark: SparkSession, edges: DataFrame, budget: Long): Long = {
     import spark.implicits._
-    val adj = orient(spark, edges)
-      .groupBy(col("src"))
-      .agg(sort_array(collect_set(col("dst"))).as("nbrs"))
-    collectSmallAdj(adj) match {
-      case Some(adjMap) =>
-        val bc = spark.sparkContext.broadcast(adjMap)
-        val p = GraphOps.defaultParallelism(spark)
-        spark.createDataset(adjMap.keys.toSeq.sorted).repartition(p)
-          .map { u =>
-            val un = bc.value(u)
-            var n = 0L
-            var i = 0
-            while (i < un.length) {
-              bc.value.get(un(i)).foreach(vn => n += intersectCountSorted(un, vn))
-              i += 1
-            }
-            n
-          }
-          .toDF("n").agg(coalesce(sum(col("n")), lit(0L))).head().getLong(0)
-      case None =>
-        adj.select(col("src"), explode(col("nbrs")).as("dst"), col("nbrs").as("unbrs"))
-          .join(adj.select(col("src").as("dst"), col("nbrs").as("vnbrs")), "dst")
-          .agg(coalesce(sum(size(array_intersect(col("unbrs"), col("vnbrs")))), lit(0L)).as("n"))
-          .head().getLong(0)
-    }
+    pairs(adjacency(orient(edges)), budget) { it =>
+      val c = new Common
+      var n = 0L
+      it.foreach { case (_, un, _, vn) => n += c(un, vn) }
+      Iterator.single(n)
+    }.agg(coalesce(sum(col("value")), lit(0L))).head().getLong(0)
   }
 
-  /** Per-vertex triangle counts (vertices in no triangle get 0),
-    * matching the reference's per-center counting divided by the 3x
-    * multiplicity (reference `executables/patternExtractor.c:274-295`). */
-  def perVertex(spark: SparkSession, edges: DataFrame): DataFrame = {
+  /** Per-vertex triangle counts, 0 for a vertex in no triangle, matching the
+    * reference's per-center counting divided by its 3x multiplicity
+    * (`executables/patternExtractor.c:274-295`). Every pair tallies u and v
+    * by its intersection size and each common w by one, so every endpoint of
+    * an edge gets a row without a join against the vertex set. */
+  def perVertex(spark: SparkSession, edges: DataFrame): DataFrame =
+    perVertex(spark, edges, MaxBroadcastAdjEntries)
+
+  private[algo] def perVertex(spark: SparkSession, edges: DataFrame, budget: Long): DataFrame = {
     import spark.implicits._
-    val adj = orient(spark, edges)
-      .groupBy(col("src"))
-      .agg(sort_array(collect_set(col("dst"))).as("nbrs"))
-    collectSmallAdj(adj) match {
-      case Some(adjMap) =>
-        // per-vertex tallies folded inside the broadcast kernel (<= |V|
-        // keys per task) — no per-triangle row stream at all
-        val bc = spark.sparkContext.broadcast(adjMap)
-        val p = GraphOps.defaultParallelism(spark)
-        val counts = spark.createDataset(adjMap.keys.toSeq.sorted).repartition(p)
-          .mapPartitions { it =>
-            val tally = scala.collection.mutable.LongMap[Long]()
-            def bump(v: Long): Unit = tally(v) = tally.getOrElse(v, 0L) + 1L
-            it.foreach { u =>
-              val un = bc.value(u)
-              var i = 0
-              while (i < un.length) {
-                val v = un(i)
-                bc.value.get(v) match {
-                  case Some(vn) =>
-                    var x = 0; var y = 0
-                    while (x < un.length && y < vn.length) {
-                      if (un(x) == vn(y)) { bump(u); bump(v); bump(un(x)); x += 1; y += 1 }
-                      else if (un(x) < vn(y)) x += 1
-                      else y += 1
-                    }
-                  case None => ()
-                }
-                i += 1
-              }
-            }
-            tally.iterator
-          }
-          .toDF("vid", "n0")
-          .groupBy("vid").agg(sum(col("n0")).as("triangles"))
-        // the full vertex set IS the broadcast adjacency's key+value id set
-        // (every edge endpoint appears in some oriented edge), so the edge
-        // derivation need not be re-run just to enumerate vertices
-        val vids = (adjMap.keysIterator ++ adjMap.valuesIterator.flatMap(_.iterator))
-          .toArray.distinct.sorted
-        spark.createDataset(vids.toSeq).toDF("vid")
-          .join(counts, Seq("vid"), "left")
-          .select(col("vid"), coalesce(col("triangles"), lit(0L)).as("triangles"))
-      case None =>
-        // one pass over the (expensive) triangle enumeration: explode the
-        // three corners in place instead of unioning three scans of it
-        val counts = enumerateFromAdj(adj)
-          .select(explode(array(col("a"), col("b"), col("c"))).as("vid"))
-          .groupBy("vid")
-          .agg(count(lit(1)).as("triangles"))
-        GraphOps.vertices(GraphOps.canonicalEdges(edges))
-          .join(counts, Seq("vid"), "left")
-          .select(col("vid"), coalesce(col("triangles"), lit(0L)).as("triangles"))
-    }
+    pairs(adjacency(orient(edges)), budget) { it =>
+      val c = new Common
+      val tally = LongMap.empty[Long]
+      def add(x: Long, d: Long): Unit = tally(x) = tally.getOrElse(x, 0L) + d
+      it.foreach { case (u, un, v, vn) =>
+        val n = c(un, vn)
+        add(u, n); add(v, n)
+        var i = 0
+        while (i < n) { add(c.ws(i), 1L); i += 1 }
+      }
+      tally.iterator
+    }.toDF("vid", "n").groupBy("vid")
+      .agg(coalesce(sum(col("n")), lit(0L)).as("triangles")) // keeps the column non-null
   }
 
-  /** Triangle counts per UNORDERED vertex-label triple: (la, lb, lc, n) —
+  /** Triangle counts per unordered vertex-label triple (la <= lb <= lc, n),
     * the input to label-multiset fingerprints (reference
     * `executables/patternExtractor.c:121-177` fingerprintTriple works per
-    * enumerated triangle; at 10^8 triangles the labels must ride ALONG the
-    * enumeration, not be joined onto it afterwards). The label alphabet is
-    * collected into a tiny dictionary (the same bounded-alphabet contract
-    * as the miner's frequent-edge list) and each neighbor is encoded as
-    * `vid * K + labelId` so the adjacency arrays stay LONG arrays —
-    * `array_intersect` keeps its specialized long fast path (struct
-    * elements fall back to interpreted pairwise comparison, measured 10x+
-    * slower). Only the <= |alphabet|^3 aggregated classes are decoded back
-    * to strings. Requires non-negative vertex ids < 2^52 / K. */
-  def labelTripleCounts(spark: SparkSession, edges: DataFrame, labels: DataFrame): DataFrame = {
+    * triangle; at 10^8 triangles the labels must ride along the walk, not be
+    * joined onto it afterwards).
+    *
+    * This is the plain kernel over label-encoded ids: with the label
+    * alphabet collected into a sorted dictionary of k ids, each endpoint
+    * becomes `vid * k + lid` before orienting. The encoding keeps vid order,
+    * so the kernel runs on the encoded graph unchanged and finds each
+    * triangle once, and `id mod k` is the label; the fold tallies the sorted
+    * label triple packed into one long, and only the <= k^3 classes are
+    * decoded.
+    * An edge with an unlabeled endpoint is dropped by the encoding, so a
+    * triangle with an unlabeled vertex is counted in no class. Requires
+    * vertex ids with |vid| * k + k inside the long range. */
+  def labelTripleCounts(spark: SparkSession, edges: DataFrame, labels: DataFrame): DataFrame =
+    labelTripleCounts(spark, edges, labels, MaxBroadcastAdjEntries)
+
+  private[algo] def labelTripleCounts(spark: SparkSession, edges: DataFrame, labels: DataFrame,
+      budget: Long): DataFrame = {
     import spark.implicits._
     val lab = labels.select(col(labels.columns(0)).cast("long").as("vid"),
       col(labels.columns(1)).cast("string").as("lab"))
-    val dict = lab.select("lab").distinct().orderBy("lab")
-      .as[String].collect().zipWithIndex.toSeq
-    val k = math.max(1, dict.size)
-    val dictDF = dict.toDF("lab", "lid")
-    val labeled = lab.join(broadcast(dictDF), "lab")
-      .select(col("vid"), col("lid").cast("long").as("lid"))
-    val adj = orient(spark, edges)
-      .join(labeled.select(col("vid").as("dst"), col("lid").as("dlid")), "dst")
-      .select(col("src"), (col("dst") * k + col("dlid")).as("enc"))
-      .groupBy(col("src"))
-      .agg(sort_array(collect_set(col("enc"))).as("nbrs"))
-    // tkey = sorted label triple packed into ONE long (lo*k^2 + mid*k + hi):
-    // the per-row hash-agg key stays primitive — no array allocation per
-    // triangle on the 10^8-row stream.
-    val counted = collectSmallAdj(adj) match {
-      case Some(adjMap) =>
-        // broadcast enumeration over the label-encoded adjacency — same
-        // zero-join shape as [[enumerate]]'s small path, with the triple
-        // tally folded INSIDE the kernel loop (<= |labels|^3 keys per task)
-        // so no per-triangle row or object is ever materialized
-        val lidMap = labeled.select(col("vid"), col("lid")).collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-        val bcAdj = spark.sparkContext.broadcast(adjMap)
-        val bcLid = spark.sparkContext.broadcast(lidMap)
-        val kk = k.toLong
-        val p = GraphOps.defaultParallelism(spark)
-        spark.createDataset(adjMap.keys.toSeq.sorted)(spark.implicits.newLongEncoder)
-          .repartition(p)
-          .mapPartitions { it =>
-            val tally = scala.collection.mutable.LongMap[Long]()
-            it.foreach { u =>
-              val un = bcAdj.value(u)
-              val slid = bcLid.value(u)
-              var i = 0
-              while (i < un.length) {
-                val encV = un(i)
-                val dlid = encV % kk
-                bcAdj.value.get(encV / kk) match {
-                  case Some(vn) =>
-                    var x = 0; var y = 0
-                    while (x < un.length && y < vn.length) {
-                      if (un(x) == vn(y)) {
-                        val wlid = un(x) % kk
-                        val lo = math.min(slid, math.min(dlid, wlid))
-                        val hi = math.max(slid, math.max(dlid, wlid))
-                        val mid = slid + dlid + wlid - lo - hi
-                        val tkey = lo * (kk * kk) + mid * kk + hi
-                        tally(tkey) = tally.getOrElse(tkey, 0L) + 1L
-                        x += 1; y += 1
-                      } else if (un(x) < vn(y)) x += 1
-                      else y += 1
-                    }
-                  case None => ()
-                }
-                i += 1
-              }
-            }
-            tally.iterator
-          }(spark.implicits.newProductEncoder[(Long, Long)])
-          .toDF("tkey", "n0").groupBy("tkey").agg(sum(col("n0")).as("n"))
-      case None =>
-        val withSrcLid = adj.join(labeled.select(col("vid").as("src"), col("lid").as("slid")), "src")
-        withSrcLid
-          .select(col("slid"), explode(col("nbrs")).as("d"), col("nbrs").as("unbrs"))
-          .select(col("slid"), pmod(col("d"), lit(k.toLong)).as("dlid"),
-            expr(s"d DIV $k").as("dstv"), col("unbrs"))
-          .join(adj.select(col("src").as("dstv"), col("nbrs").as("vnbrs")), "dstv")
-          .select(col("slid"), col("dlid"),
-            explode(array_intersect(col("unbrs"), col("vnbrs"))).as("w"))
-          .select(col("slid"), col("dlid"), pmod(col("w"), lit(k.toLong)).as("wlid"))
-          .select((least(col("slid"), col("dlid"), col("wlid")) * (k.toLong * k) +
-              (col("slid") + col("dlid") + col("wlid")
-                - least(col("slid"), col("dlid"), col("wlid"))
-                - greatest(col("slid"), col("dlid"), col("wlid"))) * k.toLong +
-              greatest(col("slid"), col("dlid"), col("wlid"))).as("tkey"))
-          .groupBy("tkey").agg(count(lit(1)).as("n"))
-    }
-    val d = broadcast(dictDF.select(col("lab"), col("lid").cast("long").as("lid")))
-    counted
-      .select(expr(s"tkey DIV ${k.toLong * k}").as("l0"),
-        pmod(expr(s"tkey DIV $k"), lit(k.toLong)).as("l1"),
-        pmod(col("tkey"), lit(k.toLong)).as("l2"), col("n"))
-      .join(d.select(col("lid").as("l0"), col("lab").as("la")), "l0")
-      .join(d.select(col("lid").as("l1"), col("lab").as("lb")), "l1")
-      .join(d.select(col("lid").as("l2"), col("lab").as("lc")), "l2")
-      .select(col("la"), col("lb"), col("lc"), col("n"))
+    val names = lab.select("lab").distinct().orderBy("lab").as[String].collect()
+    val k = math.max(1, names.length).toLong
+    val enc = lab.join(broadcast(names.toSeq.zipWithIndex.toDF("lab", "lid")), "lab")
+      .select(col("vid"), (col("vid") * k + col("lid")).as("enc"))
+    val encoded = GraphOps.endpoints(edges)
+      .join(enc.select(col("vid").as("src"), col("enc").as("s")), "src")
+      .join(enc.select(col("vid").as("dst"), col("enc").as("d")), "dst")
+      .select(col("s").as("src"), col("d").as("dst"))
+    val counts = pairs(adjacency(orient(encoded)), budget) { it =>
+      val c = new Common
+      val tally = LongMap.empty[Long]
+      it.foreach { case (u, un, v, vn) =>
+        val n = c(un, vn)
+        val (a, b) = (Math.floorMod(u, k), Math.floorMod(v, k))
+        var i = 0
+        while (i < n) {
+          val w = Math.floorMod(c.ws(i), k)
+          val lo = math.min(a, math.min(b, w))
+          val hi = math.max(a, math.max(b, w))
+          val key = (lo * k + (a + b + w - lo - hi)) * k + hi
+          tally(key) = tally.getOrElse(key, 0L) + 1L
+          i += 1
+        }
+      }
+      tally.iterator
+    }.toDF("tkey", "n0").groupBy("tkey").agg(sum(col("n0")).as("n"))
+    val name = typedLit(names)
+    counts.select(name(expr(s"tkey DIV ${k * k}")).as("la"), name(expr(s"tkey DIV $k") % k).as("lb"),
+      name(col("tkey") % k).as("lc"), col("n"))
   }
 
-  /** Common-neighbor count for each connected pair (reference
-    * `graph.c:105-123` `commonNeighborCount`). */
-  def commonNeighbors(spark: SparkSession, edges: DataFrame): DataFrame = {
+  /** Common-neighbour count of each connected pair src < dst (reference
+    * `graph.c:105-123` `commonNeighborCount`): the kernel over the symmetric
+    * adjacency, one row per undirected edge. */
+  def commonNeighbors(spark: SparkSession, edges: DataFrame): DataFrame =
+    commonNeighbors(spark, edges, MaxBroadcastAdjEntries)
+
+  private[algo] def commonNeighbors(spark: SparkSession, edges: DataFrame, budget: Long): DataFrame = {
     import spark.implicits._
-    val sym = GraphOps.symmetrize(edges)
-    val adj = sym.groupBy(col("src")).agg(sort_array(collect_set(col("dst"))).as("nbrs"))
-    collectSmallAdj(adj) match {
-      case Some(adjMap) =>
-        // same broadcast treatment as [[enumerate]]'s small path, over the
-        // SYMMETRIC adjacency: one (src, dst, common) row per undirected
-        // edge, no array-carrying join exchanges
-        val bc = spark.sparkContext.broadcast(adjMap)
-        val p = GraphOps.defaultParallelism(spark)
-        spark.createDataset(adjMap.keys.toSeq.sorted).repartition(p)
-          .flatMap { u =>
-            val un = bc.value(u)
-            un.iterator.filter(_ > u).map { v =>
-              // Int count — same column type as the join path's `size()`
-              (u, v, bc.value.get(v).map(vn => intersectCountSorted(un, vn).toInt).getOrElse(0))
-            }
-          }
-          .toDF("src", "dst", "common")
-      case None =>
-        sym.where(col("src") < col("dst"))
-          .join(adj.select(col("src"), col("nbrs").as("snbrs")), "src")
-          .join(adj.select(col("src").as("dst"), col("nbrs").as("dnbrs")), "dst")
-          .select(col("src"), col("dst"),
-            size(array_intersect(col("snbrs"), col("dnbrs"))).as("common"))
-    }
+    pairs(adjacency(GraphOps.symmetrize(edges)), budget) { it =>
+      val c = new Common
+      it.collect { case (u, un, v, vn) if v > u => (u, v, c(un, vn)) }
+    }.toDF("src", "dst", "common")
   }
 }

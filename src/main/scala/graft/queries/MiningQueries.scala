@@ -176,7 +176,7 @@ object MiningQueries {
       // first (codegen'd array_sort on 3 elements, partial agg collapses the
       // ~10^8 triangles to <= |labels|^3/6 classes) and hash the few
       // surviving classes — not each triangle. Labels ride along the
-      // enumeration itself (Triangles.labelTriples): at sf0.1 the three
+      // triangle walk itself (Triangles.labelTripleCounts): at sf0.1 the three
       // per-triangle broadcast joins of the round-3 formulation dominated
       // the whole query.
       val lab = t(s, dir, "supplier").select(col("s_suppkey").as("vid"), col("s_nationkey").cast("string").as("lab"))

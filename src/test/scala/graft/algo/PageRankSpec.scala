@@ -268,4 +268,20 @@ class PageRankSpec extends AnyFunSuite with SparkTestBase {
       assertAllClose(got, ReferenceOracles.pageRankScalarFixed(e, 5), 1e-12)
     }
   }
+
+  test("run and writeStatic leave the caller's session conf as they found it") {
+    val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+    val df = Generators.edgesDF(spark, Generators.barabasiAlbert(30, 2, seed = 5L))
+    def unchanged(body: => Unit): Unit = {
+      val before = spark.conf.getAll
+      body
+      assert(spark.conf.getAll == before)
+    }
+    val original = spark.conf.getAll.get(key)
+    try for (callers <- Seq(None, Some("4096"))) {
+      callers.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      unchanged(GraphOps.releaseCheckpoint(PageRank.run(spark, df, maxIter = 3).ranks))
+      unchanged(PageRank.writeStatic(spark, df, java.nio.file.Files.createTempDirectory("graft-conf").toString))
+    } finally original.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
