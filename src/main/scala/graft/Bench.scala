@@ -148,7 +148,7 @@ object Bench {
     pb.environment().put("SPARK_HOME", sys.env.getOrElse("SPARK_HOME", "/opt/spark"))
     pb.environment().put("SPARK_SCALA_VERSION", "2.13")
     pb.environment().put("SPARK_LOCAL_DIRS", sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/spark-local"))
-    // the ContextCleaner GC nudge in PageRank.run is opt-in (harness-only)
+    // the ContextCleaner GC nudge between BenchWorker iterations is opt-in
     pb.environment().put("GRAFT_PR_GC", "1")
     // phase 2 precomputed the static adjacency/vertex tables: point the
     // worker at them when present (identical measured work, cheap setup)

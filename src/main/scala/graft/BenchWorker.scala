@@ -64,12 +64,20 @@ object BenchWorker {
         lastCpu = cpuAtLoopStart; lastTasks = listener.tasks.get()
         lastGc = listener.gcMillis.get(); lastFetch = listener.shufFetchNanos.get()
       },
-      onEnd = it => if (sys.env.contains("GRAFT_PR_VERBOSE")) {
-        val (c, t) = (listener.cpuNanos.get(), listener.tasks.get())
-        val (g, f) = (listener.gcMillis.get(), listener.shufFetchNanos.get())
-        println(f"[prx] iter=$it cpu=${(c - lastCpu) / 1e9}%.1f tasks=${t - lastTasks} " +
-          f"gc=${(g - lastGc) / 1e3}%.1f fetchwait=${(f - lastFetch) / 1e9}%.1f")
-        lastCpu = c; lastTasks = t; lastGc = g; lastFetch = f
+      onEnd = it => {
+        if (sys.env.contains("GRAFT_PR_VERBOSE")) {
+          val (c, t) = (listener.cpuNanos.get(), listener.tasks.get())
+          val (g, f) = (listener.gcMillis.get(), listener.shufFetchNanos.get())
+          println(f"[prx] iter=$it cpu=${(c - lastCpu) / 1e9}%.1f tasks=${t - lastTasks} " +
+            f"gc=${(g - lastGc) / 1e3}%.1f fetchwait=${(f - lastFetch) / 1e9}%.1f")
+          lastCpu = c; lastTasks = t; lastGc = g; lastFetch = f
+        }
+        // Old shuffles and broadcasts are dropped only when the driver's
+        // ContextCleaner sees their weak references die, i.e. after a driver
+        // GC; on a large-heap driver that can lag a long run and pile up
+        // shuffle files. `Bench` sets GRAFT_PR_GC for its workers; the nudge
+        // runs between timed iterations.
+        if (it % 5 == 0 && sys.env.contains("GRAFT_PR_GC")) System.gc()
       })
     val wall = (System.nanoTime() - t0) / 1e9
     val hostCores = Runtime.getRuntime.availableProcessors() // = affinity-mask size under taskset

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.graph.GraphOps
+import graft.run.Iterate
 
 /** Connected components via alternating large-star / small-star rounds
   * (Kiveris et al., "Connected Components in MapReduce and Beyond" —
@@ -27,10 +28,10 @@ import graft.graph.GraphOps
   * next window too. Hub skew: all edge rows of a hub go to (and are sorted
   * in) the one task owning its `src`, as under the join-back's sort-merge
   * join; no map-side combine shrinks them. Rounds converge in O(log n).
-  * Termination = the edge set reached a fixpoint, detected with the edge
-  * count observed on each round's checkpoint job and confirmed by an exact
-  * anti-join only when the count says "stable" (so the expensive check
-  * runs once). One action per round.
+  * The rounds run in [[graft.run.Iterate]], one action per round: each
+  * round's checkpoint job observes its edge count, and the stop test (a
+  * fixpoint of the edge set) confirms equal counts with an exact anti-join
+  * of the two checkpoints, so the expensive check runs once.
   */
 object ConnectedComponents {
 
@@ -42,42 +43,30 @@ object ConnectedComponents {
       .select(greatest(col("src"), col("dst")).as("src"), least(col("src"), col("dst")).as("dst")), p)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val allVerts = GraphOps.vertices(initial).persist(StorageLevel.MEMORY_AND_DISK)
-    var e = initial // the current round's edges
     try {
       allVerts.count()
-      var eCount = e.count() // carried across rounds
-      var round = 0
-      var converged = eCount == 0L
-      while (!converged && round < maxRounds) {
-        // localCheckpoint truncates the per-round lineage growth (the iterative
-        // analogue of GraphFrames' checkpoint interval); the same eager job
-        // observes the round's edge count for the convergence test below.
-        val (ss, stats) = GraphOps.checkpointObserved(smallStar(largeStar(e, p), p), Seq(functions.count(lit(1))))
-        val prev = e
-        e = ss
-        // Stable iff the (src,dst) set is unchanged; both sides are distinct
-        // sets here so equal counts + empty anti-join is an exact test. Then
-        // the superseded round's CHECKPOINT blocks can be freed (plain
-        // unpersist cannot reach them).
-        converged = try stats.getLong(0) == eCount && e.join(prev, Seq("src", "dst"), "left_anti").isEmpty
-          finally if (prev ne initial) GraphOps.releaseCheckpoint(prev)
-        eCount = stats.getLong(0)
-        round += 1
-      }
+      var edgeCount = initial.count() // the previous round's, for the stop test
+      // Stable iff the (src,dst) set is unchanged; both sides are distinct
+      // sets here so equal counts + empty anti-join is an exact test.
+      val stars = Iterate(initial, 0, if (edgeCount == 0L) 0 else maxRounds, stop = (prev, next, stats) => {
+        val stable = stats.getLong(0) == edgeCount && next.join(prev, Seq("src", "dst"), "left_anti").isEmpty
+        edgeCount = stats.getLong(0)
+        stable
+      })(e => GraphOps.checkpointObserved(smallStar(largeStar(e, p), p), Seq(functions.count(lit(1)))))
 
       // Star edges point child -> root (src > dst); roots label themselves.
       // Eagerly checkpointed so every internal frame (the edge cache, the
       // vertex set, the final star round) can be released before returning —
       // the caller gets exactly ONE materialized result frame, same contract
       // as the miners' output.
-      allVerts
-        .join(e.select(col("src").as("vid"), col("dst").as("component")), Seq("vid"), "left")
+      try allVerts
+        .join(stars.state.select(col("src").as("vid"), col("dst").as("component")), Seq("vid"), "left")
         .select(col("vid"), coalesce(col("component"), col("vid")).as("component"))
         .localCheckpoint(true)
+      finally Iterate.release(stars.state)
     } finally {
       initial.unpersist(false)
       allVerts.unpersist(false)
-      if (e ne initial) GraphOps.releaseCheckpoint(e)
     }
   }
 

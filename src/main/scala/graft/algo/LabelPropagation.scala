@@ -1,9 +1,10 @@
 package graft.algo
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.graph.GraphOps
+import graft.run.Iterate
 
 /** Label propagation, two modes (SURVEY.md §2.8.2):
   *
@@ -21,12 +22,14 @@ import graft.graph.GraphOps
   *     updates, new label = most frequent neighbor label, deterministic
   *     tie-break by minimum label id.
   *
-  * Scale design: both modes are one shuffle per iteration — scatter labels
-  * across edges, `groupBy(dst)` aggregate. `collect_list` of neighbor labels
-  * is bounded by max degree; for WL on power-law graphs the signature of a
-  * hub is large, so the hash-combine variant ([[wlRefineHashed]]) folds
-  * neighbor hashes with a commutative (sum, bit_xor, count) triple instead of
-  * materializing the sorted list, keeping partial aggregation map-side.
+  * Scale design: both modes are one shuffle per round — scatter labels
+  * across edges, `groupBy(dst)` aggregate — and run their rounds in
+  * [[graft.run.Iterate]], each round's labels one checkpoint action.
+  * `collect_list` of neighbor labels is bounded by max degree; for WL on
+  * power-law graphs the signature of a hub is large, so the hash-combine
+  * variant ([[wlRefineHashed]]) folds neighbor hashes with a commutative
+  * (sum, bit_xor, count) triple instead of materializing the sorted list,
+  * keeping partial aggregation map-side.
   */
 object LabelPropagation {
 
@@ -94,34 +97,19 @@ object LabelPropagation {
           coalesce(col("hcnt"), lit(0L))).as("label"))
     }
 
-  /** The WL round loop of [[wlRefine]] and [[wlRefineHashed]]: hashed start
+  /** The WL rounds of [[wlRefine]] and [[wlRefineHashed]]: hashed start
     * labels over the cached symmetric edges, then `rounds` times
-    * `step(sym, labels)`, each round's (vid, label) checkpointed. */
+    * `step(sym, labels)`. */
   private def wlRounds(spark: SparkSession, edges: DataFrame, initialLabels: DataFrame, rounds: Int)(
       step: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val p = GraphOps.defaultParallelism(spark)
     val sym = symmetricEdges(edges, p).persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = initialLabels
+    val start = initialLabels
       .select(col(initialLabels.columns(0)).cast("long").as("vid"),
         xxhash64(col(initialLabels.columns(1)).cast("string")).as("label"))
       .repartition(p, col("vid"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    labels.count()
-    var i = 0
-    while (i < rounds) {
-      val next = step(sym, labels)
-        .repartition(p, col("vid"))
-        .localCheckpoint(true) // truncate per-round lineage (see PageRank)
-      // superseded round's CHECKPOINT blocks too (plain unpersist is a no-op
-      // on a localCheckpoint'd frame — see GraphOps.releaseCheckpoint); the
-      // start labels are a plain persist over the caller's frame, whose own
-      // checkpoint, if any, releaseCheckpoint would free with them
-      if (i == 0) labels.unpersist(false) else GraphOps.releaseCheckpoint(labels)
-      labels = next
-      i += 1
-    }
-    sym.unpersist(false)
-    labels
+    propagate(start, rounds, p, Seq(sym, start))(step(sym, _))
   }
 
   /** Majority-vote label propagation. Initial label = own vid unless given.
@@ -144,13 +132,11 @@ object LabelPropagation {
       if (iterate) df.persist(StorageLevel.MEMORY_AND_DISK) else df
     val sym = cached(symmetricEdges(edges, p))
     val verts = cached(GraphOps.vertices(sym))
-    var labels = cached(initialLabels
+    val start = cached(initialLabels
       .map(df => df.select(col(df.columns(0)).cast("long").as("vid"), col(df.columns(1)).cast("long").as("label")))
       .getOrElse(verts.select(col("vid"), col("vid").as("label")))
       .repartition(p, col("vid")))
-    if (iterate) labels.count()
-    var i = 0
-    while (i < rounds) {
+    propagate(start, rounds, p, if (iterate) Seq(sym, verts, start) else Nil) { labels =>
       val votes = sym
         .join(labels.withColumnRenamed("vid", "dst"), "dst")
         .groupBy(col("src").as("vid"), col("label"))
@@ -159,18 +145,22 @@ object LabelPropagation {
         .groupBy("vid")
         .agg(max(struct(col("votes"), (-col("label")).as("negLabel"))).as("best"))
         .select(col("vid"), (-col("best.negLabel")).as("newLabel"))
-      val next = labels
+      labels
         .join(winner, Seq("vid"), "left")
         .select(col("vid"), coalesce(col("newLabel"), col("label")).as("label"))
-        .repartition(p, col("vid"))
-        .localCheckpoint(true) // truncate per-round lineage (see PageRank)
-      // checkpoint blocks, not just cache; the start labels as in [[wlRounds]]
-      if (i == 0) labels.unpersist(false) else GraphOps.releaseCheckpoint(labels)
-      labels = next
-      i += 1
     }
-    sym.unpersist(false)
-    verts.unpersist(false)
-    labels
   }
+
+  /** `rounds` rounds of `step` from the (vid, label) `start`, each round's
+    * labels repartitioned by `vid` and checkpointed. `start` is counted
+    * first if it is one of the `cached` frames, which are unpersisted when
+    * this returns or throws. */
+  private def propagate(start: DataFrame, rounds: Int, p: Int, cached: Seq[DataFrame])(
+      step: DataFrame => DataFrame): DataFrame =
+    try {
+      if (cached.contains(start)) start.count()
+      Iterate(start, 0, rounds) { labels =>
+        (step(labels).repartition(p, col("vid")).localCheckpoint(true), Row.empty)
+      }.state
+    } finally cached.foreach(_.unpersist(false))
 }

@@ -600,33 +600,35 @@ object FrequentSubtrees {
     val seed = freq1.select("vlabel").as[String]
       .map(l => Pattern(Seq(l), Nil, l, ""))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val unordered = frequentTriples(e
-      .join(v.select(col("graph_id"), col("vid").as("src"), col("vlabel").as("sl")), Seq("graph_id", "src"))
-      .join(v.select(col("graph_id"), col("vid").as("dst"), col("vlabel").as("dl")), Seq("graph_id", "dst"))
-      .select(col("graph_id"), least(col("sl"), col("dl")).as("la"), col("elabel"),
-        greatest(col("sl"), col("dl")).as("lb"))
-      .distinct().drop("graph_id"), threshold)
-    val bcEdges = spark.sparkContext.broadcast(unordered.flatMap { case (a, l, b) => bothWays(a, l, b) }.distinct)
-    var patternsDS: Dataset[Pattern] = seed
     // `results` reads EVERY level's checkpoint, so all stay resident until
-    // `out` is checkpointed.
+    // the result is checkpointed; all are released when this returns or throws.
     val levelCheckpoints = ArrayBuffer[DataFrame]()
-    var more = bcEdges.value.nonEmpty // as in [[levelwise]]: no level-1 count
-    var level = 2
-    while (level <= maxPatternSize && more) {
-      val (next, stats) = GraphOps.checkpointObserved(
-        patternsDS.flatMap(pat => extensionsOf(pat, bcEdges.value, freeCanonical)).dropDuplicates("key").toDF(),
-        Seq(count(lit(1))))
-      levelCheckpoints += next
-      patternsDS = next.as[Pattern]
-      more = stats.getLong(0) > 0
-      results = results.union(next.select(lit(level).as("size"), col("key").as("cstring")))
-      level += 1
+    try {
+      val unordered = frequentTriples(e
+        .join(v.select(col("graph_id"), col("vid").as("src"), col("vlabel").as("sl")), Seq("graph_id", "src"))
+        .join(v.select(col("graph_id"), col("vid").as("dst"), col("vlabel").as("dl")), Seq("graph_id", "dst"))
+        .select(col("graph_id"), least(col("sl"), col("dl")).as("la"), col("elabel"),
+          greatest(col("sl"), col("dl")).as("lb"))
+        .distinct().drop("graph_id"), threshold)
+      val bcEdges = spark.sparkContext.broadcast(unordered.flatMap { case (a, l, b) => bothWays(a, l, b) }.distinct)
+      var patternsDS: Dataset[Pattern] = seed
+      var more = bcEdges.value.nonEmpty // as in [[levelwise]]: no level-1 count
+      var level = 2
+      while (level <= maxPatternSize && more) {
+        val (next, stats) = GraphOps.checkpointObserved(
+          patternsDS.flatMap(pat => extensionsOf(pat, bcEdges.value, freeCanonical)).dropDuplicates("key").toDF(),
+          Seq(count(lit(1))))
+        levelCheckpoints += next
+        patternsDS = next.as[Pattern]
+        more = stats.getLong(0) > 0
+        results = results.union(next.select(lit(level).as("size"), col("key").as("cstring")))
+        level += 1
+      }
+      results.orderBy("size", "cstring").localCheckpoint(true)
+    } finally {
+      seed.unpersist(false)
+      levelCheckpoints.foreach(GraphOps.releaseCheckpoint)
     }
-    val out = results.orderBy("size", "cstring").localCheckpoint(true)
-    seed.unpersist(false)
-    levelCheckpoints.foreach(GraphOps.releaseCheckpoint)
-    out
   }
 
   // ------------------------------------------------------------- DFS miner

@@ -10,10 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * the keys below. */
 class EnvReadsSpec extends AnyFunSuite {
 
-  /** Deployment settings (the host's scratch directories and core count)
-    * and the harness-owned GC nudge that `Bench` sets for its PageRank
-    * workers. */
-  private val allowedKeys = Set("SPARK_LOCAL_DIRS", "SPARK_GRAFT_CPUS", "GRAFT_PR_GC")
+  /** Deployment settings: the host's scratch directories and core count. */
+  private val allowedKeys = Set("SPARK_LOCAL_DIRS", "SPARK_GRAFT_CPUS")
 
   private def isHarness(f: Path) = f.getFileName.toString.matches("Bench.*\\.scala")
 

@@ -1,15 +1,13 @@
 package graft.algo
 
-import java.util.concurrent.atomic.AtomicBoolean
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{LogicalRDD, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions.{col, udf}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{ActionLog, SparkTestBase}
+import graft.FailureChecks.{assertFailsWithoutLeak, failingFirstCheckpointRead}
 import graft.fixtures.{Generators, ReferenceOracles}
 
 class ConnectedComponentsSpec extends AnyFunSuite with SparkTestBase {
@@ -109,35 +107,17 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTestBase {
     assert(labelsOf(df) == ReferenceOracles.connectedComponentsMinVid(clean))
   }
 
-  private def assertFailsWithoutLeak(df: DataFrame, message: String): Unit = {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val err = intercept[Exception](ConnectedComponents.run(spark, df))
-    val messages = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
-    assert(messages.exists(_.contains(message)), err)
-    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(left.isEmpty, s"left persisted RDDs $left")
-  }
-
   test("a failure mid-run rethrows and leaves no persisted RDD behind") {
     val path = Generators.edgesDF(spark, Generators.path(20))
     // set-up fails while it builds its caches
     val boom = udf((v: Long) => if (v == 7L) throw new IllegalStateException("bad vertex 7") else v)
-    assertFailsWithoutLeak(path.select(boom(col("src")).as("src"), col("dst")), "bad vertex 7")
+    assertFailsWithoutLeak(spark, "bad vertex 7")(
+      ConnectedComponents.run(spark, path.select(boom(col("src")).as("src"), col("dst"))))
     // a round fails once the set-up caches and a round's checkpoint exist:
     // the first plan that reads a checkpoint fails to optimize
-    val fired = new AtomicBoolean(false)
-    object FailOnCheckpointRead extends Rule[LogicalPlan] {
-      def apply(plan: LogicalPlan): LogicalPlan = {
-        if (plan.exists(_.isInstanceOf[LogicalRDD]) && fired.compareAndSet(false, true))
-          throw new IllegalStateException("round failed")
-        plan
-      }
+    failingFirstCheckpointRead(spark, "round failed") {
+      assertFailsWithoutLeak(spark, "round failed")(ConnectedComponents.run(spark, path))
     }
-    val rules = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = Seq(FailOnCheckpointRead)
-    try assertFailsWithoutLeak(path, "round failed")
-    finally spark.experimental.extraOptimizations = rules
-    assert(fired.get)
   }
 
   test("plan shape: a round is 3 shuffle exchanges and reads the previous round twice") {

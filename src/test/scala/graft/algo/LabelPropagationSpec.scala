@@ -1,11 +1,14 @@
 package graft.algo
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{ActionLog, SparkTestBase}
+import graft.FailureChecks.{assertFailsWithoutLeak, failingFirstCheckpointRead}
+import graft.graph.GraphOps
 import graft.fixtures.{Generators, ReferenceOracles}
 
 class LabelPropagationSpec extends AnyFunSuite with SparkTestBase {
@@ -151,6 +154,53 @@ class LabelPropagationSpec extends AnyFunSuite with SparkTestBase {
       val labels = spark.createDataFrame(vids.map(v => (v, v % 3))).toDF("vid", "label").localCheckpoint(true)
       call(labels)
       assert(labels.count() == vids.size, mode)
+    }
+  }
+
+  test("one action per round: after set-up, each round is its checkpoint") {
+    val e = Generators.barabasiAlbert(40, 2, seed = 5L)
+    val df = Generators.edgesDF(spark, e)
+    val init = spark.createDataFrame((e.map(_._1) ++ e.map(_._2)).distinct.map(v => (v, "a"))).toDF("vid", "label")
+    def actions(call: => DataFrame): Seq[String] =
+      ActionLog.during(spark) { log => GraphOps.releaseCheckpoint(call); log.names }
+    // set-up counts the cached start labels
+    for (k <- Seq(1, 3))
+      assert(actions(LabelPropagation.wlRefineHashed(spark, df, init, k)) ==
+        "count" +: Seq.fill(k)("localCheckpoint"), s"$k rounds")
+    assert(actions(LabelPropagation.majority(spark, df, 3)) == "count" +: Seq.fill(3)("localCheckpoint"))
+    // a single majority round persists nothing, so it has no set-up action
+    assert(actions(LabelPropagation.majority(spark, df, 1)) == Seq("localCheckpoint"))
+  }
+
+  test("a failed round or set-up rethrows and leaves no persisted RDD behind") {
+    val e = Generators.barabasiAlbert(40, 2, seed = 5L)
+    val df = Generators.edgesDF(spark, e)
+    val vids = (e.map(_._1) ++ e.map(_._2)).distinct
+    val init = spark.createDataFrame(vids.map(v => (v, v % 3))).toDF("vid", "label")
+    val modes = Seq[(String, (DataFrame, DataFrame) => DataFrame)](
+      "wlRefine" -> ((edges, labels) => LabelPropagation.wlRefine(spark, edges, labels, 2)),
+      "wlRefineHashed" -> ((edges, labels) => LabelPropagation.wlRefineHashed(spark, edges, labels, 3)),
+      "majority 3 rounds" -> ((edges, labels) => LabelPropagation.majority(spark, edges, 3, Some(labels))),
+      "majority 1 round" -> ((edges, labels) => LabelPropagation.majority(spark, edges, 1, Some(labels))))
+    // a round fails to optimize once the set-up caches and the previous
+    // round's checkpoint exist: the first plan that reads a checkpoint is
+    // round 2's, or the only round's over checkpointed start labels
+    for ((mode, call) <- modes) {
+      val labels = if (mode == "majority 1 round") init.localCheckpoint(true) else init
+      failingFirstCheckpointRead(spark, s"$mode failed") {
+        assertFailsWithoutLeak(spark, s"$mode failed")(call(df, labels))
+      }
+      GraphOps.releaseCheckpoint(labels)
+    }
+    // a vertex that fails when read: in the edges, round 1 fails; in the
+    // start labels, the set-up count fails (a single majority round has no
+    // set-up, so there its round fails)
+    val boom = udf((v: Long) => if (v == 7L) throw new IllegalStateException("bad vertex 7") else v)
+    val badEdges = df.select(boom(col("src")).as("src"), col("dst"))
+    val badLabels = init.select(boom(col("vid")).as("vid"), col("label"))
+    for ((_, call) <- modes) {
+      assertFailsWithoutLeak(spark, "bad vertex 7")(call(badEdges, init))
+      assertFailsWithoutLeak(spark, "bad vertex 7")(call(df, badLabels))
     }
   }
 }

@@ -1,11 +1,8 @@
 package graft.mining
 
-import java.util.concurrent.atomic.AtomicBoolean
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{ActionLog, SparkTestBase}
+import graft.FailureChecks.{assertFailsWithoutLeak, failingFirstCheckpointRead}
 import graft.mining.SubtreeIso.LTree
 
 class FrequentSubtreesSpec extends AnyFunSuite with SparkTestBase {
@@ -243,26 +240,21 @@ class FrequentSubtreesSpec extends AnyFunSuite with SparkTestBase {
 
   test("a failed level rethrows and leaves no persisted RDD behind") {
     val (verts, edges) = forestDB()
-    val before = spark.sparkContext.getPersistentRDDs.keySet
     // the first plan that reads a checkpoint (level 2's next state, over its
     // frequent keys) fails to optimize, once the set-up caches, the level's
     // survivors and matches and its frequent-key checkpoint all exist
-    val fired = new AtomicBoolean(false)
-    object FailOnCheckpointRead extends Rule[LogicalPlan] {
-      def apply(plan: LogicalPlan): LogicalPlan = {
-        if (plan.exists(_.isInstanceOf[LogicalRDD]) && fired.compareAndSet(false, true))
-          throw new IllegalStateException("level failed")
-        plan
-      }
+    failingFirstCheckpointRead(spark, "level failed") {
+      assertFailsWithoutLeak(spark, "level failed")(FrequentSubtrees.mine(spark, verts, edges, 2L, maxPatternSize = 3))
     }
-    val rules = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = Seq(FailOnCheckpointRead)
-    val err = try intercept[Exception](FrequentSubtrees.mine(spark, verts, edges, 2L, maxPatternSize = 3))
-      finally spark.experimental.extraOptimizations = rules
-    assert(fired.get)
-    val messages = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
-    assert(messages.exists(_.contains("level failed")), err)
-    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(left.isEmpty, s"left persisted RDDs $left")
+  }
+
+  test("treeEnumeration: a failed level rethrows and leaves no persisted RDD behind") {
+    val (verts, edges) = forestDB()
+    // level 3 reads level 2's checkpoint and fails to optimize, once the
+    // seed patterns are cached and level 2 is checkpointed
+    failingFirstCheckpointRead(spark, "level failed") {
+      assertFailsWithoutLeak(spark, "level failed")(
+        FrequentSubtrees.enumerateTrees(spark, verts, edges, 1L, maxPatternSize = 3))
+    }
   }
 }
