@@ -241,11 +241,10 @@ object MiningQueries {
     "f_tpk_patterns" -> ((s, dir) => {
       import s.implicits._
       grouped[(Long, Long, Long)](s, dir, GraphDBs.orderCyclesDB(s, dir)) { (gid, es, lab) =>
-        val trees = graft.trees.TreeKernels.listSpanningTrees(es, 100000)
-        val pats = trees.map(_.map(tr => graft.trees.TreeKernels.canonicalString(tr, lab)).distinct)
+        val pats = graft.trees.TreeKernels.spanningTreePatterns(es, lab)
         Iterator.single((gid,
-          trees.map(_.size.toLong).getOrElse(-1L),
-          pats.map(_.size.toLong).getOrElse(-1L)))
+          pats.map(_._1.toLong).getOrElse(-1L),
+          pats.map(_._2.size.toLong).getOrElse(-1L)))
       }.toDF("graph_id", "n_spanning", "n_patterns").orderBy("graph_id")
     }),
 

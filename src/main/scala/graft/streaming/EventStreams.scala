@@ -2,27 +2,17 @@ package graft.streaming
 
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming operators (SURVEY.md §2.9: the reference is one-pass
-  * batch, so the engine's streaming layer is the standard web-pipeline trio:
-  * watermarked tumbling windows, stateful sessionization, and stateful
-  * dedup). Transform functions take/return Datasets so the identical code
+  * batch, so the engine's streaming layer is the standard web-pipeline set:
+  * stateful sessionization, watermarked dedup and an ordered-step funnel).
+  * Transform functions take/return Datasets so the identical code
   * runs over `readStream` sources and over batch frames in tests. */
 object EventStreams {
 
   final case class Event(event_id: Long, ts: Timestamp, user_id: Long, event_type: String, value: Double)
   final case class SessionUpdate(user_id: Long, sessions_closed: Long, events_in_last: Long)
-
-  /** Tumbling 1-hour windowed counts per event_type with a 2-hour watermark
-    * (late data beyond the watermark is dropped, state is bounded). */
-  def hourlyCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum("value").as("sum_value"))
-      .select(col("window.start").as("window_start"), col("event_type"), col("n"), col("sum_value"))
 
   /** Stateful sessionization: per-user state tracks the open session; a gap
     * over `gapMinutes` closes it. The batch equivalent (lag/cumsum windows)

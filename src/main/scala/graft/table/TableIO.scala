@@ -101,24 +101,6 @@ object TableIO {
     m
   }
 
-  /** Write `df` as a BUCKETED catalog table (hash-bucketed by `bucketCols`
-    * into `nBuckets` files per partition, sorted within buckets): the
-    * co-located-join primitive of the 100-TB design. Two tables bucketed the
-    * same way join WITHOUT a shuffle on either side — the scan's bucket
-    * layout satisfies the join's required distribution, so iterative
-    * workloads (rank vector vs static adjacency, dedup signatures vs corpus)
-    * pay the partitioning once at write time instead of every join
-    * (`BucketedJoinSpec` asserts the Exchange-free plan). Plain parquet
-    * snapshots (`commit`) lose their partitioning on read-back — that is
-    * why this goes through the catalog, which records bucket metadata. */
-  def commitBucketed(df: DataFrame, tableName: String, bucketCols: Seq[String], nBuckets: Int): Unit = {
-    require(bucketCols.nonEmpty && nBuckets > 0)
-    df.write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .saveAsTable(tableName)
-  }
-
   def latestSnapshotId(root: String): Option[Long] = {
     val p = Paths.get(root, "LATEST")
     if (Files.exists(p)) Some(new String(Files.readAllBytes(p), StandardCharsets.UTF_8).trim.toLong) else None

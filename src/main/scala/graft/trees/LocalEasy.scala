@@ -154,18 +154,6 @@ object LocalEasy {
     (forests.distinct.size.toLong, nonisoComponentCount(forests, labels))
   }
 
-  /** Connected-component count of an edge list (the divisor of the gf
-    * `...Normalized` sampled-measure variants, reference `filter.c:449-478`:
-    * measure / getAndMarkConnectedComponents). Isolated vertices cannot
-    * appear in an edge list, matching the reference's edge-built graphs. */
-  def countComponents(edges: Seq[Edge]): Long = {
-    val verts = edges.flatMap(e => Seq(e._1, e._2)).distinct
-    val parent = mutable.Map[Long, Long]()
-    def find(x: Long): Long = { var r = x; while (parent.getOrElse(r, r) != r) r = parent(r); r }
-    for ((a, b) <- edges) { val (ra, rb) = (find(a), find(b)); if (ra != rb) parent(ra) = rb }
-    verts.map(find).distinct.size.toLong
-  }
-
   // ------------------------------------------- embedding operators (miner)
 
   /** Exact local-easy embedding operator: tree pattern h embeds in some

@@ -14,9 +14,7 @@ import scala.util.Random
   *    lexicographic min over the 1-2 tree-center roots, centers via
   *    iterative leaf-stripping, reference `treeCenter.c:133-168`),
   *  - spanning-tree sampling: Wilson's loop-erased random walks (reference
-  *    `wilsonsAlgorithm.c:113,138`) and Kruskal on a seeded edge shuffle
-  *    (reference `kruskalsAlgorithm.c:45`, shuffle `sampleSubtrees.c:96-112`),
-  *    both seeded and reproducible.
+  *    `wilsonsAlgorithm.c:113,138`), seeded and reproducible.
   */
 object TreeKernels {
 
@@ -89,37 +87,6 @@ object TreeKernels {
     }
     // every vertex except the root ends in the tree with a parent link
     verts.filter(_ != verts.head).map(v => (v, next(v)))
-  }
-
-  /** Kruskal on a seeded Fisher–Yates edge shuffle -> random spanning forest
-    * (reference `sampleSubtrees.c:96-166`). */
-  def kruskalSpanningTree(edges: Seq[Edge], seed: Long): Seq[Edge] = {
-    val rnd = new Random(seed)
-    val es = rnd.shuffle(edges.distinct.filter(e => e._1 != e._2).toVector)
-    val parent = mutable.Map[Long, Long]()
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    val out = mutable.ArrayBuffer[Edge]()
-    for ((a, b) <- es) {
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { parent(ra) = rb; out += ((a, b)) }
-    }
-    out.toSeq
-  }
-
-  /** Sample k spanning trees (Wilson) and count distinct isomorphism classes
-    * via canonical strings — the `ts` pipeline (reference
-    * `treeSamplingMain.c:297-303`: canonical string -> searchTree dedupe). */
-  def distinctSpanningTreeCount(edges: Seq[Edge], labels: Map[Long, String], k: Int, seed: Long): (Long, Seq[String]) = {
-    val strings = (0 until k).map { i =>
-      canonicalString(wilsonSpanningTree(edges, seed + i), labels)
-    }
-    (strings.distinct.size.toLong, strings.distinct.sorted)
   }
 
   /** Is `tree` a spanning tree of the graph given by `edges`? (|V|-1 edges,
@@ -462,11 +429,12 @@ object TreeKernels {
   /** tpk 'p' output: the distinct canonical strings of ALL spanning trees of
     * the graph (reference `executables/main.c:186-219`: listSpanningTrees ->
     * canonicalStringOfTree -> searchTree dedupe -> `# id count` + strings).
+    * Returns the number of spanning trees listed with the sorted strings;
     * None when the enumeration bound is hit (the reference only processes
     * graphs whose spanning-tree estimate is below `-filter`). */
   def spanningTreePatterns(edges: Seq[Edge], labels: Map[Long, String],
-      maxTrees: Int = 100000): Option[Seq[String]] =
+      maxTrees: Int = 100000): Option[(Int, Seq[String])] =
     listSpanningTrees(edges, maxTrees).map { trees =>
-      trees.map(t => canonicalString(t, labels)).distinct.sorted
+      (trees.size, trees.map(t => canonicalString(t, labels)).distinct.sorted)
     }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Distributed application of the per-graph tree kernels over a
   * transactional graph DB (graph_id-keyed edge/vertex tables): one small
   * graph per group, millions of groups in parallel — the Spark shape of the
-  * reference's per-graph streaming loop (`ts`, `cstring` executables).
+  * reference's per-graph streaming loop (the `cstring` executable).
   * The only shuffle is the groupBy(graph_id). */
 object TreeOps {
 
@@ -26,20 +26,5 @@ object TreeOps {
         (gid, TreeKernels.canonicalString(es, labels))
       }
       .toDF("graph_id", "cstring")
-  }
-
-  /** `ts`-equivalent: sample k spanning trees per graph (Wilson, seeded by
-    * graph_id so the result is independent of execution order), dedupe by
-    * canonical string. Output: (graph_id, n_distinct, cstrings). */
-  def sampleSpanningTrees(spark: SparkSession, edges: DataFrame, k: Int, seed: Long): DataFrame = {
-    import spark.implicits._
-    val e = edges.select(col("graph_id").cast("long"), col("src").cast("long"), col("dst").cast("long"))
-      .as[(Long, Long, Long)]
-    e.groupByKey(_._1).mapGroups { (gid, it) =>
-      val es = it.map(t => (t._2, t._3)).toSeq
-      val labels = es.flatMap(x => Seq(x._1, x._2)).distinct.map(_ -> "v").toMap
-      val (n, strings) = TreeKernels.distinctSpanningTreeCount(es, labels, k, seed ^ gid)
-      (gid, n, strings)
-    }.toDF("graph_id", "n_distinct", "cstrings")
   }
 }

@@ -1,6 +1,7 @@
 package graft.mining
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions.{col, lit, raise_error, when}
 import graft.{ActionLog, SparkTestBase}
 import graft.FailureChecks.{assertFailsWithoutLeak, failingFirstCheckpointRead}
 import graft.mining.SubtreeIso.LTree
@@ -255,6 +256,24 @@ class FrequentSubtreesSpec extends AnyFunSuite with SparkTestBase {
     failingFirstCheckpointRead(spark, "level failed") {
       assertFailsWithoutLeak(spark, "level failed")(
         FrequentSubtrees.enumerateTrees(spark, verts, edges, 1L, maxPatternSize = 3))
+    }
+  }
+
+  test("a failed DFS mine rethrows and leaves no persisted RDD or live broadcast behind") {
+    val (verts, edges) = forestDB()
+    // a raise_error row fails while the shuffle stages under the graph cache
+    // run, before the cache exists; an edge to a vertex its graph lacks fails
+    // in the per-graph re-indexing, once the graph cache is persisted
+    val raising = edges.withColumn("src",
+      when(col("graph_id") === 2L && col("dst") === 3L, raise_error(lit("dfs failed"))).otherwise(col("src")))
+    val dangling = edges.union(Seq((2L, 0L, 9L, "x")).toDF("graph_id", "src", "dst", "elabel"))
+    for ((bad, message) <- Seq(raising -> "dfs failed", dangling -> "key not found: 9")) {
+      val created0 = FrequentSubtrees.dfsBroadcastsCreated.get()
+      val destroyed0 = FrequentSubtrees.dfsBroadcastsDestroyed.get()
+      assertFailsWithoutLeak(spark, message)(
+        FrequentSubtrees.mineDfs(spark, verts, bad, 1L, maxPatternSize = 3).collect())
+      assert(FrequentSubtrees.dfsBroadcastsCreated.get() - created0 ==
+        FrequentSubtrees.dfsBroadcastsDestroyed.get() - destroyed0)
     }
   }
 }

@@ -11,24 +11,6 @@ class EventStreamsSpec extends AnyFunSuite with SparkTestBase {
 
   private def ts(minutes: Long) = new Timestamp(1700000000000L + minutes * 60000)
 
-  test("watermarked hourly window aggregation over a MemoryStream") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Event]
-    val q = EventStreams.hourlyCounts(input.toDF())
-      .writeStream.format("memory").queryName("hourly").outputMode(OutputMode.Update()).start()
-    try {
-      input.addData(
-        Event(1, ts(0), 1, "click", 1.0),
-        Event(2, ts(10), 1, "click", 2.0),
-        Event(3, ts(70), 2, "view", 3.0))
-      q.processAllAvailable()
-      val rows = spark.table("hourly")
-        .collect().map(r => (r.getString(1), r.getLong(2), r.getDouble(3))).toSet
-      assert(rows == Set(("click", 2L, 3.0), ("view", 1L, 3.0)))
-    } finally q.stop()
-  }
-
   test("stateful sessionization closes sessions across batches") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -142,9 +142,6 @@ class LocalEasySpec extends AnyFunSuite {
     val g = ltree(Seq.fill(6)("o"),
       Seq((0, 1, "e"), (0, 2, "e"), (3, 4, "e")))
     assert(LocalEasy.components(g).size == 3)
-    // countComponents (the ...Normalized gf divisor) sees edge-bearing comps
-    assert(LocalEasy.countComponents(Seq((0L, 1L), (0L, 2L), (3L, 4L))) == 2L)
-    assert(LocalEasy.countComponents(Nil) == 0L)
     val vpat = ltree(Seq("o"), Nil)
     val epat = ltree(Seq("o", "o"), Seq((0, 1, "e")))
     val p3 = path(3)

@@ -32,14 +32,15 @@ class SpanningKernelsSpec extends AnyFunSuite {
   test("spanningTreePatterns: tpk distinct canonical strings") {
     // uniform ring: n spanning trees, all isomorphic paths -> 1 pattern
     val uniform = (0L to 6L).map(_ -> "x").toMap
-    assert(TreeKernels.spanningTreePatterns(Generators.cycle(7), uniform).get.size == 1)
+    val (nTrees, pats) = TreeKernels.spanningTreePatterns(Generators.cycle(7), uniform).get
+    assert(nTrees == 7 && pats.size == 1)
     // distinct labels on a ring: cuts give n paths, pairwise non-isomorphic
     // unless the label sequence has a reversal symmetry; a,b,c,d,e has none
     val labs = Map(0L -> "a", 1L -> "b", 2L -> "c", 3L -> "d", 4L -> "e")
-    assert(TreeKernels.spanningTreePatterns(Generators.cycle(5), labs).get.size == 5)
+    assert(TreeKernels.spanningTreePatterns(Generators.cycle(5), labs).get._2.size == 5)
     // palindromic labels a,b,a on a triangle: cuts ab|a, ba|a... 2 classes
     val pal = Map(0L -> "a", 1L -> "b", 2L -> "a")
-    assert(TreeKernels.spanningTreePatterns(Generators.cycle(3), pal).get.size == 2)
+    assert(TreeKernels.spanningTreePatterns(Generators.cycle(3), pal).get._2.size == 2)
   }
 
   test("ts sampler modes: mix / cactus / bridgeForest / listOrSample") {

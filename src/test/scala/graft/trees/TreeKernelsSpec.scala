@@ -35,23 +35,12 @@ class TreeKernelsSpec extends AnyFunSuite with SparkTestBase {
 
   test("wilson + kruskal produce spanning trees (n-1 edges, connected, reproducible)") {
     val g = Generators.clique(6)
-    for (algo <- Seq[(Seq[(Long, Long)], Long) => Seq[(Long, Long)]](
-        TreeKernels.wilsonSpanningTree, TreeKernels.kruskalSpanningTree)) {
-      val t1 = algo(g, 42L)
-      val t2 = algo(g, 42L)
-      assert(t1 == t2) // seeded reproducibility
-      assert(t1.size == 5)
-      val cc = graft.fixtures.ReferenceOracles.connectedComponentsMinVid(t1)
-      assert(cc.values.toSet.size == 1)
-    }
-  }
-
-  test("distinct spanning tree counting: tree input -> 1 class; clique -> >1") {
-    val tree = Generators.path(6)
-    val (n1, _) = TreeKernels.distinctSpanningTreeCount(tree, unl(0L to 5L), 10, 1L)
-    assert(n1 == 1)
-    val (n2, _) = TreeKernels.distinctSpanningTreeCount(Generators.clique(6), unl(0L to 5L), 20, 1L)
-    assert(n2 > 1)
+    val t1 = TreeKernels.wilsonSpanningTree(g, 42L)
+    val t2 = TreeKernels.wilsonSpanningTree(g, 42L)
+    assert(t1 == t2) // seeded reproducibility
+    assert(t1.size == 5)
+    val cc = graft.fixtures.ReferenceOracles.connectedComponentsMinVid(t1)
+    assert(cc.values.toSet.size == 1)
   }
 
   test("TreeOps over a graph DB: per-graph canonical strings + sampling") {
@@ -66,8 +55,5 @@ class TreeKernelsSpec extends AnyFunSuite with SparkTestBase {
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(cs(0L) == cs(2L)) // isomorphic paths, different ids
     assert(cs(0L) != cs(1L)) // path vs star
-    val st = TreeOps.sampleSpanningTrees(spark, edges, k = 5, seed = 7L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(st.values.forall(_ == 1L)) // trees have a unique spanning tree
   }
 }
